@@ -348,6 +348,7 @@ object PersonMatching {
     val usePob = src.columns.contains(cfg.pobCol) && trg.columns.contains(cfg.pobCol)
     val nameOnly = cfg.nameOnly
     val simpleDate = cfg.useSimpleDateMatcher
+    val minScore = cfg.minScore
     if (cfg.useExpressionScorer) {
       val (sCols, sP) = personCols(cfg, src, "s_")
       val (tCols, tP) = personCols(cfg, trg, "t_")
@@ -373,6 +374,11 @@ object PersonMatching {
     // inside the probe-window spread, so the Row cost is not where
     // q22's time goes; the struct form stays (it documents the field
     // order the positional reads depend on).
+    // The UDF prunes at the cutoff: it is handed `minScore` and skips
+    // both token-set name kernels when even a perfect name score cannot
+    // reach it — exact for the `>= minScore` filter below (see
+    // Similarity.personSimilarity). The expression scorer does not prune:
+    // its filter evaluates the full expression for every candidate.
     val scoreUdf = udf { (s: org.apache.spark.sql.Row, t: org.apache.spark.sql.Row) =>
       // positional access: getAs-by-name costs a field-index hash lookup
       // per field per pair — 10 per score, tens of millions per join.
@@ -385,7 +391,8 @@ object PersonMatching {
         nameOnly = nameOnly,
         dateMatcher =
           if (simpleDate) graft.similarity.Similarity.simpleDateMatcher
-          else graft.similarity.Similarity.dateSimilarity)
+          else graft.similarity.Similarity.dateSimilarity,
+        minScore = minScore)
     }.asNondeterministic()
     // asNondeterministic (r21, guide §4.4): the minScore filter over the
     // projected score otherwise gets substituted and PUSHED INTO the

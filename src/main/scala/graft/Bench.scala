@@ -433,8 +433,10 @@ object Bench {
       case "force" => true
       case _       => only.isEmpty
     }
-    // candidate-pair counts per frac for q22 (deterministic per frac, so
-    // last write per frac wins harmlessly across the two passes)
+    // candidate counts per frac for q22 (deterministic per frac, so last
+    // write per frac wins harmlessly across the two passes). The counter
+    // counts bucket-join emissions, i.e. the pairs scored: a pair sharing
+    // k surviving buckets counts k times (PersonMatching.lastCandidateObservation)
     val q22Pairs = scala.collection.mutable.Map.empty[Double, Long]
     def lastCandidateCount(): Option[Long] =
       Option(graft.linkage.PersonMatching.lastCandidateObservation)
@@ -1008,7 +1010,8 @@ object Bench {
     val note = "q22 self-matches a fixed-vocabulary corpus: candidate pairs scale " +
       "quadratically with rows by construction (buckets densify, vocabulary does not grow); " +
       "bounded by maxBucketSize, see PersonMatching.capBuckets; candidate_pairs per scale " +
-      "point is recorded so the growth exponents are attributable to pair count vs kernel cost. " +
+      "point (bucket-join emissions, i.e. pairs scored: a pair sharing k buckets counts k " +
+      "times) is recorded so the growth exponents are attributable to pair count vs kernel cost. " +
       "q27/q35 share the densification shape on the synthetic docs corpus: gram/embedding " +
       "collisions concentrate in the first doubling (reproducibly ~1.4 then flattening " +
       "to ~0.4 for q27) - the DECREASING second exponent is the signal that the " +

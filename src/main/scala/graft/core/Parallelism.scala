@@ -34,13 +34,6 @@ object Parallelism {
       spark.sparkContext.defaultParallelism)
   }
 
-  /** `.distinct()` pinned at [[width]] partitions on `keys`. Exactly one
-    * exchange, like plain distinct — but the downstream aggregate (and
-    * whatever codegen'd/UDF work is fused after it, e.g. broadcast-join
-    * attach + scoring) runs at full machine width instead of AQE's
-    * byte-coalesced task count. `keys` must be the frame's full column
-    * set for dedup-equivalence with distinct (callers pass every column).
-    */
   /** Insert a pinned-width exchange: spreads the per-row work ABOVE it
     * to full machine width (bench-SF parquet is single-row-group, so
     * scans are one task), and — because AQE materializes each exchange
@@ -53,6 +46,14 @@ object Parallelism {
   def staged(df: DataFrame, keys: Column*): DataFrame =
     df.repartition(width(df), keys: _*)
 
+  /** `.distinct()` pinned at [[width]] partitions on `keys`. Exactly one
+    * exchange, like plain distinct — but the downstream aggregate (and
+    * whatever codegen'd/UDF work is fused after it, e.g. the attach joins
+    * and scoring `PersonMatching.scorePairs` runs over q34's MinHash
+    * candidates) runs at full machine width instead of AQE's
+    * byte-coalesced task count. `keys` must be the frame's full column
+    * set for dedup-equivalence with distinct (callers pass every column).
+    */
   def pinnedDistinct(df: DataFrame, keys: Column*): DataFrame = {
     require(keys.nonEmpty, "pinnedDistinct needs the dedup key columns")
     df.repartition(width(df), keys: _*).dropDuplicates()

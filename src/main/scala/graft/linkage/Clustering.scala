@@ -456,7 +456,7 @@ object Clustering {
   }
 
   /** Presence flags from the frame's schema — the SAME rule
-    * [[PersonMatching.scorePairs]] applies on the edge side (column
+    * [[PersonMatching.scoredPairs]] applies on the edge side (column
     * configured = column present), so edge admission and replay
     * admission score identically. A configured-but-absent date must not
     * contribute a zero to the replay while the edges ignored it.

@@ -9,11 +9,14 @@ import graft.core.SessionHygiene.TrackedCheckpoint
   * J5/A7/E9/W1/J4; reference `src/aroa_etl/person_matching/matching.py`).
   *
   * The reference's driver-side inverted index becomes a pure dataflow:
-  * explode prefix buckets on BOTH name columns of BOTH sides, equi-join
-  * per bucket, intersect the first-name and last-name candidate pair
-  * sets, score once per surviving pair, keep the top-k per source row via
-  * a window. There is never a cartesian product: every join is an
-  * equi-join on `(prefix, length-band)` bucket keys, so the plan is
+  * each side explodes its composite (first-name, last-name) prefix
+  * buckets with the person's fields riding along as one struct, the two
+  * sides equi-join per bucket, and every bucket-join row is scored where
+  * it is formed. Only the pairs that reach `minScore` are deduplicated
+  * (a pair sharing several buckets is emitted once per bucket, with the
+  * same score each time), then the top-k per source row is kept. There
+  * is never a cartesian product: every join is an equi-join on
+  * `(prefix, length-band)` bucket keys, so the plan is
   * shuffle-hash/sort-merge joinable and AQE can handle hot buckets
   * (common surnames) with skew splitting at 100 TB.
   *
@@ -43,49 +46,48 @@ object PersonMatching {
       concat_ws("|", substring(s, 1, idxChars), floor(length(s) / lenUnits).cast("string")))
   }
 
-  /** Candidate (src, trg) id pairs sharing a first-name bucket AND a
-    * last-name bucket. One equi-join on the composite (fname-bucket,
+  /** Candidate `(srcID, trgID, __srcP, __trgP)` rows: a src and a trg
+    * row sharing a first-name bucket AND a last-name bucket, each with
+    * its [[personStruct]]. One equi-join on the composite (fname-bucket,
     * lname-bucket) key: each side explodes the cross product of its own
     * bucket keys (a handful per row), so "shares some fname bucket and
     * some lname bucket" becomes a single composite-key match — no
     * materialized per-column pair sets, no intersection of near-
     * quadratic intermediates.
     *
-    * The trailing `distinct` is deliberate even for consumers that
-    * collapse duplicates themselves: A/B at sf0.1 showed removing it
-    * COSTS ~6 s on q22 — the aggregation hands AQE exact cardinality
-    * for the scoring joins that follow, which outweighs the extra
-    * shuffle.
+    * The structs travel through the explode, the cap and the join, so
+    * the scorer reads them where the pair is formed and no join attaches
+    * the persons back by id. The rows are NOT distinct: a pair sharing k
+    * surviving buckets is emitted k times. Scoring every emission and
+    * deduplicating only the pairs that reach `minScore` (see
+    * [[scoredPairs]]) costs less than a distinct over all emissions plus
+    * two attach joins: about 1% of the emissions are repeats, while the
+    * cutoff drops most of them.
     */
   private def candidatePairs(
       src: DataFrame, trg: DataFrame, cfg: MatchConfig,
       pairPredicate: Column): DataFrame = {
-    def exploded(df: DataFrame, id: String) = {
+    def exploded(df: DataFrame, id: String, person: String) = {
       val e = df
-        .select(col(id),
+        .select(col(id), personStruct(df, cfg).as(person),
           explode(bucketKeys(col(cfg.gnameCol), cfg.idxChars, cfg.lenUnits)).as("fb"),
           col(cfg.lnameCol))
-        .select(col(id), col("fb"),
+        .select(col(id), col(person), col("fb"),
           explode(bucketKeys(col(cfg.lnameCol), cfg.idxChars, cfg.lenUnits)).as("lb"))
       capBuckets(e, id, effectiveMaxBucketSize(cfg))
     }
-    val s = exploded(src, "srcID")
-    val t = exploded(trg, "trgID")
-    // the pair predicate runs BEFORE the dedup aggregation: a row-level
-    // filter commutes with distinct, and pruning first (e.g. the
-    // self-join's srcID <= trgID) halves what the distinct shuffles.
-    // Pinned width (r21): the distinct's output feeds the scoring stage
-    // (broadcast attach joins + the similarity kernels fuse after the
-    // final aggregate), and AQE's byte-based coalescing shrank that
-    // CPU-bound stage to 16 tasks on a 32-core box — see
-    // [[graft.core.Parallelism.pinnedDistinct]].
-    val pairs = graft.core.Parallelism.pinnedDistinct(
-      s.join(t, Seq("fb", "lb")).select("srcID", "trgID").filter(pairPredicate),
-      col("srcID"), col("trgID"))
+    val s = exploded(src, "srcID", "__srcP")
+    val t = exploded(trg, "trgID", "__trgP")
+    // the join runs at the width capBuckets' (fb, lb) repartition pinned
+    // (both sides share that partitioning), and so does the scoring fused
+    // after it: no exchange sits between the join and the score UDF
+    val pairs = s.join(t, Seq("fb", "lb"))
+      .select("srcID", "trgID", "__srcP", "__trgP")
+      .filter(pairPredicate)
     // candidate counting is OPT-IN (CountCandidatesProp): CollectMetrics
     // is "free" plan-wise (no shuffle) but not run-wise — an un-consumed
     // Observation leaks its listener on the session, and the metrics
-    // projection sits on the distinct output for every downstream run.
+    // projection sits on the join output for every downstream run.
     // The bench's scaling pass flips this on for dedicated, untimed
     // count runs; the hot path stays exactly the measured plan.
     if (sys.props.get(CountCandidatesProp).contains("1")) {
@@ -95,7 +97,7 @@ object PersonMatching {
     } else pairs
   }
 
-  /** Opt-in switch for the candidate-pair counter in [[candidatePairs]]. */
+  /** Opt-in switch for the candidate counter in [[candidatePairs]]. */
   private[graft] val CountCandidatesProp = "graft.match.countCandidates"
 
   /** Bench-only override of `MatchConfig.maxBucketSize` — lets the
@@ -122,10 +124,13 @@ object PersonMatching {
         }
     }
 
-  /** Most recent surviving-candidate counter (bench/test observability;
-    * set once per [[candidatePairs]] call when [[CountCandidatesProp]]
-    * is "1"). `Observation.get` blocks until the first action over the
-    * plan completes.
+  /** Most recent candidate counter (bench/test observability; set once
+    * per [[candidatePairs]] call when [[CountCandidatesProp]] is "1").
+    * It counts bucket-join emissions that pass the pair predicate, which
+    * are exactly the pairs the scorer runs on: a pair sharing k surviving
+    * buckets counts k times, so this is at least the number of distinct
+    * candidate pairs. `Observation.get` blocks until the first action
+    * over the plan completes.
     */
   @volatile private[graft] var lastCandidateObservation: org.apache.spark.sql.Observation = _
 
@@ -166,16 +171,17 @@ object PersonMatching {
     val w = Window.partitionBy(col("fb"), col("lb"))
       .orderBy(hash(col(id)), col(id))
     exploded
-      // pinned width (r21): the exploded table is NARROW (id + two short
-      // bucket keys), so the window's ENSURE exchange lands under AQE's
-      // 1 MB-per-partition floor and gets coalesced to ONE task — and
-      // that task then also runs the bucket equi-join, i.e. the stage
-      // that EMITS the candidate pairs (6.3M rows on the r21 baseline)
-      // serializes on one core. The explicit partition count makes the
-      // exchange REPARTITION_BY_NUM, which AQE leaves alone, and the
-      // window reuses the partitioning, so the exchange count is
-      // unchanged. Width scales with the session (Parallelism.width),
-      // not a local constant.
+      // pinned width (r21): AQE coalesces the window's ENSURE exchange by
+      // bytes, and a small exploded table (on the r21 baseline it held
+      // only the id and the two bucket keys) lands under its 1 MB-per-
+      // partition floor and runs as ONE task — and that task then also
+      // runs the bucket equi-join and the scoring fused after it, i.e.
+      // the stage that EMITS and scores the candidate pairs (6.3M rows on
+      // the r21 baseline) serializes on one core. The explicit partition
+      // count makes the exchange REPARTITION_BY_NUM, which AQE leaves
+      // alone, and the window reuses the partitioning, so the exchange
+      // count is unchanged. Width scales with the session
+      // (Parallelism.width), not a local constant.
       .repartition(graft.core.Parallelism.width(exploded), col("fb"), col("lb"))
       .withColumn("__rank", row_number().over(w))
       // coalesce: sum() over zero rows is NULL — an empty side must
@@ -293,35 +299,23 @@ object PersonMatching {
   private[graft] final case class PersonCols(
       gname: Column, lname: Column, dob: Column, pob: Column, prisoner: Column)
 
-  private def personCols(cfg: MatchConfig, df: DataFrame, prefix: String): (Seq[Column], PersonCols) = {
-    def opt(c: String, n: String): (Column, Column) =
-      if (df.columns.contains(c)) (col(c).cast("string").as(s"$prefix$n"), col(s"$prefix$n"))
-      else (lit(null).cast("string").as(s"$prefix$n"), col(s"$prefix$n"))
-    val fields = Seq(
-      opt(cfg.gnameCol, "g"), opt(cfg.lnameCol, "l"), opt(cfg.dobCol, "d"),
-      opt(cfg.pobCol, "p"), opt(cfg.prisonerCol, "n"))
-    (fields.map(_._1),
-      PersonCols(fields(0)._2, fields(1)._2, fields(2)._2, fields(3)._2, fields(4)._2))
-  }
-
-  /** J5 `person_matching` (matching.py:29-94): returns
-    * `(srcID, score, trgID)` — top-k matches ≥ minScore per source, or a
-    * single `(srcID, -1, null)` row for unmatched sources.
-    *
-    * @param src source rows with a unique `srcID` column
-    * @param trg target rows with a unique `trgID` column
-    */
   /** Scored candidate pairs only (no top-k, no sentinels): the building
     * block clustering uses for edge generation. `pairPredicate` prunes
-    * candidate pairs BEFORE the score UDF runs (e.g. `a < b` halves a
+    * candidate pairs BEFORE the scorer runs (e.g. `a < b` halves a
     * self-join's scoring work).
+    *
+    * Every bucket-join emission is scored, and only the rows that reach
+    * `minScore` are deduplicated on `(srcID, trgID)`. This is exact: the
+    * score is a pure function of the two person rows and ids are unique
+    * per side, so a pair emitted at several shared buckets gets the same
+    * score each time, and the dedup keeps exactly the distinct pairs
+    * that reach the cutoff.
     */
   def scoredPairs(
       src: DataFrame, trg: DataFrame, cfg: MatchConfig,
-      pairPredicate: Column): DataFrame = {
-    val candidates = candidatePairs(src, trg, cfg, pairPredicate)
-    scorePairs(candidates, src, trg, cfg)
-  }
+      pairPredicate: Column): DataFrame =
+    score(candidatePairs(src, trg, cfg, pairPredicate), src, trg, cfg)
+      .dropDuplicates("srcID", "trgID")
 
   /** The five scorer inputs as one struct column; columns absent from
     * `df` surface as null strings. Field ORDER is load-bearing: the
@@ -338,28 +332,33 @@ object PersonMatching {
 
   /** Score a caller-supplied `(srcID, trgID)` candidate set — the same
     * scoring the blocked join applies, reusable over any blocking scheme
-    * (E8 MinHash candidates, seeded pairs, …).
+    * (E8 MinHash candidates, seeded pairs, …). Both sides' person structs
+    * are attached by id; every candidate row that reaches `minScore`
+    * yields one output row.
     */
   def scorePairs(
       candidates: DataFrame, src: DataFrame, trg: DataFrame,
       cfg: MatchConfig): DataFrame = {
-    val useDate = src.columns.contains(cfg.dobCol) && trg.columns.contains(cfg.dobCol)
-    val usePrisoner = src.columns.contains(cfg.prisonerCol) && trg.columns.contains(cfg.prisonerCol)
-    val usePob = src.columns.contains(cfg.pobCol) && trg.columns.contains(cfg.pobCol)
+    val srcP = src.select(col("srcID"), personStruct(src, cfg).as("__srcP"))
+    val trgP = trg.select(col("trgID"), personStruct(trg, cfg).as("__trgP"))
+    score(candidates.join(srcP, "srcID").join(trgP, "trgID"), src, trg, cfg)
+  }
+
+  /** The scoring core of [[scoredPairs]] and [[scorePairs]]: scores
+    * `(srcID, trgID, __srcP, __trgP)` rows and keeps
+    * `(srcID, score, trgID)` at `score >= minScore`. The date, prisoner
+    * and birthplace terms take part when their column is present on both
+    * sides.
+    */
+  private def score(
+      pairs: DataFrame, src: DataFrame, trg: DataFrame, cfg: MatchConfig): DataFrame = {
+    def onBothSides(c: String) = src.columns.contains(c) && trg.columns.contains(c)
+    val useDate = onBothSides(cfg.dobCol)
+    val usePrisoner = onBothSides(cfg.prisonerCol)
+    val usePob = onBothSides(cfg.pobCol)
     val nameOnly = cfg.nameOnly
     val simpleDate = cfg.useSimpleDateMatcher
     val minScore = cfg.minScore
-    if (cfg.useExpressionScorer) {
-      val (sCols, sP) = personCols(cfg, src, "s_")
-      val (tCols, tP) = personCols(cfg, trg, "t_")
-      val srcF = src.select((col("srcID") +: sCols): _*)
-      val trgF = trg.select((col("trgID") +: tCols): _*)
-      return candidates.join(srcF, "srcID").join(trgF, "trgID")
-        .withColumn("score", personSimilarityColumn(sP, tP,
-          useDate, usePrisoner, usePob, nameOnly, simpleDate))
-        .filter(col("score") >= cfg.minScore)
-        .select(col("srcID"), col("score"), col("trgID"))
-    }
     // The scorer stays a UDF by default: the score feeds both the
     // cutoff Filter and the output Project, and a composite column
     // expression is re-evaluated in each. Re-measured after hot-bucket
@@ -367,65 +366,80 @@ object PersonMatching {
     // UDF 17.5/19.7 s vs expression 28.6/24.2 s — the single-dispatch
     // UDF still wins ~1.4×; cost is dominated by the string kernels
     // either way. `useExpressionScorer` keeps the codegen path
-    // selectable for filter-pushdown use cases.
+    // selectable for filter-pushdown use cases; it reads the same
+    // struct fields the UDF does.
     // A FLAT 10-string-arg UDF (no per-pair Row structs) was also
     // A/B'd (q22 sf0.1, best-of-4, two pairs): flat 5.60/5.47 s vs
     // struct 6.01/5.35 s — each variant won one pair, differences
     // inside the probe-window spread, so the Row cost is not where
-    // q22's time goes; the struct form stays (it documents the field
-    // order the positional reads depend on).
+    // q22's time goes; the struct form stays (it is also what the
+    // blocked join carries through its bucket explode).
     // The UDF prunes at the cutoff: it is handed `minScore` and skips
     // both token-set name kernels when even a perfect name score cannot
     // reach it — exact for the `>= minScore` filter below (see
     // Similarity.personSimilarity). The expression scorer does not prune:
     // its filter evaluates the full expression for every candidate.
-    val scoreUdf = udf { (s: org.apache.spark.sql.Row, t: org.apache.spark.sql.Row) =>
-      // positional access: getAs-by-name costs a field-index hash lookup
-      // per field per pair — 10 per score, tens of millions per join.
-      // Field order is pinned by personStruct below.
-      def p(r: org.apache.spark.sql.Row) = graft.similarity.Similarity.Person(
-        r.getString(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getString(4))
-      graft.similarity.Similarity.personSimilarity(p(s), p(t),
-        useDate = useDate, usePrisoner = usePrisoner, usePob = usePob,
-        nameOnly = nameOnly,
-        dateMatcher =
-          if (simpleDate) graft.similarity.Similarity.simpleDateMatcher
-          else graft.similarity.Similarity.dateSimilarity,
-        minScore = minScore)
-    }.asNondeterministic()
-    // asNondeterministic (r21, guide §4.4): the minScore filter over the
-    // projected score otherwise gets substituted and PUSHED INTO the
-    // attach join as a join condition while the projection keeps its own
-    // copy — the executed r21-baseline plan evaluated the kernel UDF
-    // TWICE per surviving pair (BroadcastHashJoin ..., (UDF(..) >= 80.0)
-    // under Project [UDF(..) AS score]), doubling the dominant CPU cost
-    // of every blocked join. The kernel is pure, so the only semantic
-    // effect of the flag is blocking that duplication.
-    val srcP = src.select(col("srcID"), personStruct(src, cfg).as("__srcP"))
-    val trgP = trg.select(col("trgID"), personStruct(trg, cfg).as("__trgP"))
-    candidates
-      .join(srcP, "srcID").join(trgP, "trgID")
-      .withColumn("score", scoreUdf(col("__srcP"), col("__trgP")))
-      .filter(col("score") >= cfg.minScore)
+    val scoreCol =
+      if (cfg.useExpressionScorer) {
+        def fields(p: String) = PersonCols(col(s"$p.gname"), col(s"$p.lname"),
+          col(s"$p.dob"), col(s"$p.pob"), col(s"$p.prisoner"))
+        personSimilarityColumn(fields("__srcP"), fields("__trgP"),
+          useDate, usePrisoner, usePob, nameOnly, simpleDate)
+      } else {
+        val scoreUdf = udf { (s: org.apache.spark.sql.Row, t: org.apache.spark.sql.Row) =>
+          // positional access: getAs-by-name costs a field-index hash lookup
+          // per field per pair — 10 per score, tens of millions per join.
+          // Field order is pinned by personStruct.
+          def p(r: org.apache.spark.sql.Row) = graft.similarity.Similarity.Person(
+            r.getString(0), r.getString(1), r.getString(2),
+            r.getString(3), r.getString(4))
+          graft.similarity.Similarity.personSimilarity(p(s), p(t),
+            useDate = useDate, usePrisoner = usePrisoner, usePob = usePob,
+            nameOnly = nameOnly,
+            dateMatcher =
+              if (simpleDate) graft.similarity.Similarity.simpleDateMatcher
+              else graft.similarity.Similarity.dateSimilarity,
+            minScore = minScore)
+        }.asNondeterministic()
+        // asNondeterministic (r21, guide §4.4): the minScore filter over the
+        // projected score otherwise gets substituted and PUSHED INTO the
+        // join below as a join condition while the projection keeps its own
+        // copy — the executed r21-baseline plan evaluated the kernel UDF
+        // TWICE per surviving pair (BroadcastHashJoin ..., (UDF(..) >= 80.0)
+        // under Project [UDF(..) AS score]), doubling the dominant CPU cost
+        // of every blocked join. The kernel is pure, so the only semantic
+        // effect of the flag is blocking that duplication.
+        scoreUdf(col("__srcP"), col("__trgP"))
+      }
+    pairs
+      .withColumn("score", scoreCol)
+      .filter(col("score") >= minScore)
       .select(col("srcID"), col("score"), col("trgID"))
   }
 
+  /** J5 `person_matching` (matching.py:29-94): returns
+    * `(srcID, score, trgID)` — top-k matches ≥ minScore per source, or a
+    * single `(srcID, -1, null)` row for unmatched sources.
+    *
+    * @param src source rows with a unique `srcID` column
+    * @param trg target rows with a unique `trgID` column
+    */
   def personMatching(src: DataFrame, trg: DataFrame, cfg: MatchConfig = MatchConfig()): DataFrame = {
     val scored =
       if (!cfg.selfJoinMirror) scoredPairs(src, trg, cfg, lit(true))
       else {
         require(!cfg.useSimpleDateMatcher,
           "selfJoinMirror needs a symmetric scorer; simple_date_matcher is directional")
-        // kernels run once per unordered pair; the mirror is an INLINE
-        // generator over the scored stream (r21) — each scored row
-        // explodes into itself plus, off the diagonal, its swap. The
-        // previous shape localCheckpoint'ed the half and unioned two
-        // reads of it: correct, but it materialized every ≥minScore pair
-        // (73 MB at sf0.1) and re-scanned the blocks once per consumer;
-        // the single-consumer explode keeps the mirror inside the
-        // scoring stage, where the top-k aggregation's map-side partial
-        // then collapses it before anything is shuffled or stored.
+        // kernels run only for unordered pairs (srcID <= trgID); the
+        // mirror is an INLINE generator over the deduplicated scored
+        // stream (r21) — each kept row explodes into itself plus, off the
+        // diagonal, its swap. The previous shape localCheckpoint'ed the
+        // half and unioned two reads of it: correct, but it materialized
+        // every ≥minScore pair (73 MB at sf0.1) and re-scanned the blocks
+        // once per consumer; the single-consumer explode keeps the mirror
+        // inside the stage after the dedup, where the top-k aggregation's
+        // map-side partial then collapses it before anything is shuffled
+        // or stored.
         val half = scoredPairs(src, trg, cfg, col("srcID") <= col("trgID"))
         val fwd = struct(col("srcID"), col("score"), col("trgID"))
         val rev = struct(col("trgID").as("srcID"), col("score"), col("srcID").as("trgID"))

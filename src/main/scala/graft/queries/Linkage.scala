@@ -25,11 +25,13 @@ object Linkage {
         col("p_partkey").cast("string").as("prisoner_number"))
       .filter(length(col("strGName_processed")) >= 2 && length(col("strLName_processed")) >= 2)
   // NOTE (r21): deliberately NOT repartitioned here — this frame is
-  // re-executed 4-6× per consuming query (both join sides, both attach
-  // sides, the unmatched anti-join), so an upstream exchange multiplies
-  // into several extra shuffle jobs (same-window A/B: +1.7-2.9 s on
-  // q23/q34/q61). The kernels that need width are behind single-point
-  // pins instead (capBuckets' (fb,lb) repartition, pinnedDistinct).
+  // re-executed several times per consuming query (both bucket-join
+  // sides, q34's two attach sides, the unmatched anti-join), so an
+  // upstream exchange multiplies into several extra shuffle jobs
+  // (same-window A/B: +1.7-2.9 s on q23/q34/q61). The kernels that need
+  // width are behind single-point pins instead: the blocked join scores
+  // at the width of capBuckets' (fb,lb) repartition, and q34's MinHash
+  // candidates go through pinnedDistinct before scorePairs.
 
   /** J5 self-match: the blocked fuzzy join over the synthesized persons,
     * top-1 per source. The oracle is exact: every source's best match is

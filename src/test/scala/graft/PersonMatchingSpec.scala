@@ -154,6 +154,28 @@ class PersonMatchingSpec extends SparkSpec {
     } finally sys.props.remove(PersonMatching.MaxBucketSizeOverrideProp)
     // and both sides' drop counters are retrievable for the demo
     assert(PersonMatching.lastDropObservationsBySide.keySet === Set("srcID", "trgID"))
+
+    // the candidate counter counts bucket-join emissions, the pairs the
+    // scorer runs on: under the cap each surviving pair shares one
+    // bucket (25), while "anna maria" x "nowak" shares the composite
+    // buckets (an|1, no|1) and (ma|1, no|1), so its one kept pair is
+    // emitted, scored and counted twice
+    val twoBuckets = Seq((100L, "anna maria", "nowak", "19300101", "brno", "100"))
+      .toDF("id", "strGName_processed", "strLName_processed", "strDoB_processed",
+        "strPoB_processed", "prisoner_number")
+    def counted(s: org.apache.spark.sql.DataFrame, t: org.apache.spark.sql.DataFrame,
+        cfg: MatchConfig): (Long, Long) = {
+      sys.props(PersonMatching.CountCandidatesProp) = "1"
+      try {
+        val kept = PersonMatching.scoredPairs(s, t, cfg, lit(true)).count()
+        (kept, graft.core.SessionHygiene.observedLong(
+          PersonMatching.lastCandidateObservation, "candidate_pairs", timeoutMs = 60000L))
+      } finally sys.props.remove(PersonMatching.CountCandidatesProp)
+    }
+    assert(counted(src, trg, MatchConfig(minScore = 0.0, maxBucketSize = 5)) === ((25L, 25L)))
+    assert(counted(twoBuckets.withColumnRenamed("id", "srcID"),
+      twoBuckets.withColumnRenamed("id", "trgID"), MatchConfig(minScore = 0.0)) === ((1L, 2L)),
+      "one pair sharing two buckets is one kept row and two counted emissions")
   }
 
   test("expression scorer path agrees with the UDF path end to end") {

@@ -1,104 +1,63 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.ScaleKnob
+import graft.linkage.PersonMatching
 
-/** Driver-run benchmark: per-query wall seconds.
+/** Benchmark over the registered queries: per-query wall
+  * seconds on one corpus, the growth of the similarity and dedup
+  * families across corpus sizes, and the candidate counts that
+  * attribute that growth.
   *
-  * Results are materialized through the noop sink (every column computed
-  * and serialized, nothing written) rather than `count()` — under count
-  * Catalyst prunes unreferenced projections and a query would be benched
-  * cheaper than its real cost. A query that fails on EVERY run is
-  * recorded in `failed` and makes the run exit non-zero; a query that
-  * fails on some runs but succeeds on another is recorded in `flaky`
-  * (its best successful time still counts) so intermittent failures are
-  * visible instead of silently swallowed by best-of-N.
+  * Measurement. Each query is materialized through the noop sink (every
+  * column computed and serialized, nothing written) rather than
+  * `count()`, under which Catalyst prunes unreferenced projections and a
+  * query would be benched cheaper than its real cost. Main-pass times
+  * are best-of-N (`SPARK_GRAFT_BEST_OF`, default 2; the heavy similarity
+  * queries take at least 3). Run 1 of each query pays that query's own
+  * codegen/JIT even after the untimed table warmup, so best-of-N reads
+  * as steady-state cost; the `warmup` block records the
+  * first-run-over-best spread as cold-start provenance.
   *
-  * Output protocol (the driver archives only the last ~2000 chars of
-  * stdout, and round 5 learned the hard way that one long line gets cut
-  * mid-map, losing the total):
-  *   - the FULL result JSON — precise timings, every main-pass run,
-  *     scaling details, caps — is written to a file. The default path
-  *     is TIMESTAMPED (BENCH_FULL_<utc>.json in cwd): the r10 driver
-  *     run taught that a fixed default lets one contended window
-  *     silently clobber committed quiet evidence in the working tree.
-  *     Overwriting a fixed path (e.g. the committed BENCH_FULL.json)
-  *     is an explicit opt-in via SPARK_GRAFT_BENCH_FULL=<path>;
-  *   - stdout's LAST line is a compact summary (3-decimal timings,
-  *     exponents only for scaling) sized to survive the tail capture,
-  *     with a pointer to the full file.
+  * Calibration probe. A constant, data-independent job (range(20M) ->
+  * hash -> sum) runs on the same executor pool before the main pass and
+  * after every measurement batch. When the probe after a batch reads
+  * more than 2x the running median of the probes before it, the batch is
+  * re-measured once and `best_sec` takes the min over both attempts
+  * (contention only ever inflates a timing); the query is listed in
+  * `contention_retries`. The scaling and sf1 passes gate each point the
+  * same way. Every query records `probe_adjacent_sec`, the median of the
+  * probes bracketing its runs, and `total_probe_normalized` (`tpn` in
+  * the compact line) sums best_sec / probe_adjacent_sec, so a wall time
+  * is always read next to the probe level it was measured at.
   *
-  * Main-pass timings are best-of-2 (SPARK_GRAFT_BEST_OF to override;
-  * the heavy similarity queries get best-of-3 minimum) so a noisy
-  * sandbox neighbor can't fake an 8× regression — the scaling pass
-  * already measured that single-shot times swing enough to flip a
-  * ratio by 2×. Round 6 still recorded q27 at 2.5× quiet-machine truth
-  * because both best-of-2 runs landed in one noisy window; round 7's
-  * fixed CALIBRATION PROBE (a constant 20M-row range→hash→sum,
-  * data-independent, timed before the main pass and after every query)
-  * DETECTED that — round 7's artifact flagged 14 contended queries —
-  * but still RECORDED the noisy number as `best_sec`. Round 8 closes
-  * the loop: PROBE-GATED RETRY. After a query, if its probe reads hot
-  * (> 2× the running probe median), the whole best-of-N batch is
-  * re-measured once and `best_sec` takes the min over ALL successful
-  * runs — valid because contention only ever inflates a timing, so min
-  * is a monotone estimator of quiet-machine truth. Both attempts' runs
-  * and probes stay in the full JSON, and retried queries are listed in
-  * `contention_retries`, so the correction is in-band and auditable.
-  * Round 9 extends the same gate to the scaling pass (per scale point,
-  * bounded to one retry per point — r8's only misleading number, q22
-  * full_sec 28.3 s vs quiet 7.1 s at identical candidate counts, came
-  * from the then-ungated scaling pass), cross-checks the two sections
-  * in-band (`consistency` entries whenever a query's scaling full point
-  * disagrees >2x with its main-pass best — same query, same corpus,
-  * so disagreement = one side was contended), and records wall-clock
-  * start/end plus the full probe series so any judge can rerun quiet
-  * and diff provenance in one step (README "Reproducing the bench").
-  * Round 10 makes the consistency gate SELF-REPAIRING (`best_known_sec`
-  * per flagged query and a `total_best_known` headline take the min of
-  * the two sections, so contention degrades the artifact gracefully
-  * instead of recording a 19 s number next to the same query's 2.5 s),
-  * records cold-start provenance (`warmup`: run-1-over-best spread),
-  * and adds the opt-in `scaling_sf1` pass — the heavy six on a
-  * replicated ~10x corpus (ScaleKnob disjoint shards), turning the
-  * "q23/q34 near-zero exponents are fixed overhead that amortizes"
-  * claim into a measurement. Round 11 makes the normalization judges
-  * were doing by hand IN-BAND (per-query `probe_adjacent_sec` from the
-  * bracketing probes + an advisory unitless `total_probe_normalized`),
-  * ungates `best_known_sec` to the min over every same-corpus
-  * observation, timestamps the default artifact path so quiet evidence
-  * cannot be clobbered, gates warmup stats on probe quietness, and —
-  * after measuring the long-mysterious q23-adjacent probe spikes to be
-  * the bench's own one-shot post-release wake (first post-release
-  * probe 0.28-0.29 s, quiet from the second, reproducible) — precedes
-  * every gate probe with an untimed settle probe so the gate measures
-  * the machine, not the bench. Round 12 closes the last self-audit
-  * blind spot: queries outside the scaled heavy-six hold one
-  * measurement batch per artifact, so a probe-INVISIBLE slow window
-  * (IO/page cache — r11's q40 at 3.60 s vs 1.08 s same-code evidence,
-  * quiet probes both times) had no in-artifact cross-check; the
-  * advisory `drift_vs_committed` block compares every query
-  * probe-normalized against the committed quiet artifact (same-corpus
-  * only), flagging >=2x movement in-band without folding a foreign
-  * JVM's numbers into any headline. Round 13 makes that check
-  * SELF-REPAIRING: each >=2x (slow-direction) outlier still lacking an
-  * in-family second observation gets ONE re-measure batch (bounded to
-  * the worst SPARK_GRAFT_DRIFT_REPAIR_MAX, default 5), whose best
-  * feeds best_known_sec/total_best_known like any same-corpus
-  * observation — the r12 driver window held q17 at 9.68 s against a
-  * 1.01 s committed same-code recording and could only flag it; now
-  * the artifact re-measures and repairs in-band. Round 17 makes the
-  * HEADLINE itself best-known: `value` and the compact `queries` map
-  * report each query at its best-known number (raw main-pass sum kept
-  * as `value_raw`, every raw observation kept in the full JSON) — r16
-  * proved the repairs alone aren't enough when the headline still
-  * carries the contended numbers beside them.
+  * Passes:
+  *   - main: every selected query (`SPARK_GRAFT_ONLY`); `value` is the
+  *     sum of the main-pass bests (`value_def` "main_best").
+  *   - scaling: the similarity and dedup families at quarter, half and
+  *     full corpus, two growth exponents each. q22 adds its candidate
+  *     pairs per point and `cap_demo`: the full corpus at the default
+  *     hot-bucket cap and at `SPARK_GRAFT_CAP_DEMO_BUCKET` (default 64).
+  *     On for full runs; `SPARK_GRAFT_SCALING=0` disables it, `force`
+  *     runs it under an ONLY filter too.
+  *   - scaling_sf1 (opt-in, `SPARK_GRAFT_SCALING_SF1=1`): the heavy
+  *     queries once each on a corpus replicated `SPARK_GRAFT_SF1_FACTOR`
+  *     times (default 10) by ScaleKnob's disjoint shards, with q61's
+  *     candidate pairs at both sizes.
   *
-  * Note on best-of-N in one JVM: run 1 of each query pays that query's
-  * codegen/JIT even after the table warmup, so it systematically loses
-  * and "best-of-2" in practice reads as "second run". Harmless for the
-  * headline (we want steady-state cost), recorded here for honesty.
+  * Failures. A query that fails on every run is listed in `failed` and
+  * makes `main` exit non-zero; one that fails on some runs but succeeds
+  * on another is listed in `flaky` (its best successful time counts),
+  * so best-of-N never swallows an intermittent failure.
   *
-  * All knobs read system properties first, then the environment —
-  * tests can't set env vars in-process, the driver can't set props.
+  * Output. The full artifact (every run, every probe, the scaling
+  * details) is written to a timestamped `BENCH_FULL_<utc>.json`, so
+  * repeated runs never overwrite earlier evidence; a fixed path is an
+  * explicit opt-in via `SPARK_GRAFT_BENCH_FULL`. Stdout's last line is
+  * a compact summary of at most 1900 chars, sized to survive a
+  * ~2000-char tail capture, with a pointer to the full file.
+  *
+  * All knobs read system properties first, then the environment — specs
+  * can't set env vars in-process, a launcher can't set props.
   */
 object Bench {
   private[graft] def cfg(key: String, default: String): String =
@@ -130,9 +89,8 @@ object Bench {
     only.forall(f => f.contains(name) || f.contains(name.takeWhile(_ != '_')))
 
   /** Minimal JSON string escape for interpolated free-form values
-    * (paths, timestamps from a parsed file): a quote or backslash in a
-    * configured path must corrupt at worst its own field, never the
-    * whole artifact.
+    * (paths): a quote or backslash in a configured path must corrupt at
+    * worst its own field, never the whole artifact.
     */
   private[graft] def jstr(s: String): String =
     s.flatMap {
@@ -144,8 +102,7 @@ object Bench {
 
   /** Integer knob with defensive parsing: a malformed env value must
     * not kill a multi-minute bench run with a NumberFormatException at
-    * startup (same failure class as the maxBucketSize override) — warn,
-    * fall back to the default, clamp to `min`.
+    * startup — warn, fall back to the default, clamp to `min`.
     *
     * Deliberately NOT shared with the other two knob parsers: the three
     * policies differ by blast radius. Bench knobs fall back quietly (a
@@ -162,6 +119,14 @@ object Bench {
     }.max(min)
   }
 
+  /** Sets the given system properties around `body` and removes them
+    * afterwards, however `body` exits.
+    */
+  private def withProps[T](props: (String, String)*)(body: => T): T = {
+    props.foreach { case (k, v) => sys.props(k) = v }
+    try body finally props.foreach { case (k, _) => sys.props.remove(k) }
+  }
+
   /** One query's main-pass outcome: best + every run and probe, both
     * attempts when the probe gate forced a retry. `probeBeforeSec` is
     * the last probe observed before this query's first run, so together
@@ -169,16 +134,13 @@ object Bench {
     */
   final case class QueryTiming(
       name: String, bestSec: Double, runs: Seq[Double], probeBeforeSec: Double,
-      settleProbeSec: Double, probeAfterSec: Double, retryRuns: Seq[Double],
-      retrySettleSec: Option[Double], probeAfterRetrySec: Option[Double]) {
+      probeAfterSec: Double, retryRuns: Seq[Double], probeAfterRetrySec: Option[Double]) {
     /** Median of the probes bracketing this query's runs (before-first,
       * after-batch, after-retry-batch when present) — the local probe
       * level while THIS query measured, as opposed to the run-wide
-      * median a blanket-contention judge would otherwise normalize by.
-      * True median: the common two-probe case averages the pair (the
-      * upper-index shortcut used elsewhere on odd-sized pools would
-      * systematically pick the HOTTER bracket here and understate every
-      * normalized contribution).
+      * median. True median: the common two-probe case averages the pair
+      * (taking the upper index would systematically pick the HOTTER
+      * bracket and understate every normalized contribution).
       */
     def probeAdjacentSec: Double = {
       val s = (Seq(probeBeforeSec, probeAfterSec) ++ probeAfterRetrySec).sorted
@@ -192,9 +154,6 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = cfg("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = cfg("SPARK_GRAFT_CPUS", "32")
-    // default full-artifact path is timestamped so repeated runs never
-    // overwrite each other (or the committed quiet artifact); pass
-    // SPARK_GRAFT_BENCH_FULL=BENCH_FULL.json to opt in to a fixed path
     val fullPath = cfg("SPARK_GRAFT_BENCH_FULL", "") match {
       case "" =>
         // millisecond precision: scripted back-to-back runs in the same
@@ -215,22 +174,17 @@ object Bench {
     // the blocking releases in run() unpersist localCheckpoint'ed RDDs at
     // job boundaries by design; Spark warns once per RDD ("cannot be
     // recomputed after unpersisting") — ~180 lines per bench run that
-    // would crowd the driver's captured log tail. Recompute is impossible
-    // by contract at those sites (nothing re-executes a released frame),
-    // so the warning carries no signal here.
+    // would crowd the captured log tail. Nothing re-executes a released
+    // frame, so the warning carries no signal here.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd.MapPartitionsRDD",
       org.apache.logging.log4j.Level.ERROR)
-    val result = run(spark, sfDir, fullPath)
-    result match {
+    run(spark, sfDir, fullPath) match {
       case Left(err) =>
         System.err.println(err)
         spark.stop()
         sys.exit(1)
       case Right(res) =>
-        // the driver's tail capture is ~2000 chars; if the compact line
-        // ever outgrows it, drop the per-query map rather than let the
-        // line be cut mid-map (Result.compact carries the fallback too)
         println(res.compact)
         spark.stop()
         if (res.failed.nonEmpty) sys.exit(1)
@@ -247,18 +201,13 @@ object Bench {
   def run(spark: SparkSession, sfDir: String, fullPath: String): Either[String, Result] = {
     val startedMs = System.currentTimeMillis()
     val bestOf = cfgInt("SPARK_GRAFT_BEST_OF", 2, min = 1)
-    // local-iteration filter: SPARK_GRAFT_ONLY=q22,q23 times just those.
-    // Tokens match a query when they equal its name or its qNN prefix
-    // (the part before the first '_') — "q2" does NOT select q20–q29.
     val only = onlyConfigured()
     // untimed warmup: JIT/codegen/parquet-footer costs land here, not on
     // whichever query happens to run first. Goes through the typed
-    // accessors — `events` is TIMESTAMP(NANOS) and a raw scan aborts,
-    // leaving it cold and spamming the bench tail with task errors.
-    // SKIPPED under an ONLY filter: the focused-iteration loop would
-    // pay full-corpus scans (events included) for a query that may
-    // touch one table — run 1 absorbs the cold cost instead, which
-    // best-of-N and the warmup block already account for.
+    // accessors — `events` is TIMESTAMP(NANOS) and a raw scan aborts.
+    // Skipped under an ONLY filter: a focused loop must not pay
+    // full-corpus scans for a query that may touch one table; run 1
+    // absorbs the cold cost instead.
     if (only.isEmpty)
       graft.core.Tables.all(spark, sfDir).foreach { case (t, df) =>
         try df.count()
@@ -267,9 +216,6 @@ object Bench {
         }
       }
     else System.err.println("[bench] ONLY filter set - skipping the full-corpus table warmup")
-    // calibration probe: constant-cost, data-independent work. Timed on
-    // the same executor pool as the queries, so external CPU contention
-    // shows up here exactly as it does in the query timings.
     def probeOnce(): Double = {
       val t0 = System.nanoTime()
       spark.range(20000000L).selectExpr("sum(hash(id)) AS s")
@@ -277,46 +223,24 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }
     probeOnce() // untimed: pays the probe's own codegen once
-    // Untimed post-run hygiene. The similarity family localCheckpoints
-    // intermediates; those blocks stay resident until the driver GCs the
-    // RDD reference (ContextCleaner), so a long best-of-N session
-    // accumulates dead checkpoint blocks and late queries pay
-    // block-manager eviction churn — measured: q22's scaling full point
-    // reads 13.2 s at the END of a 49-query run vs 6.6 s in a short
-    // session, identical candidate counts, quiet probes both times. A
-    // production job submits each query fresh; dropping leftovers
-    // between runs restores that isolation (see SessionHygiene's doc for
-    // the full story). BLOCKING on purpose: an async unpersist queues
-    // block removal that then competes with the NEXT timed run
-    // (measured: q27 best-of runs [9.0, 19.0, 7.7] s with async release
-    // vs a stable 6.2 s without); blocking pays the whole removal cost
-    // here, untimed, so every timed run starts from an empty block
-    // manager.
-    // releaseAll, not the scoped releaseLeftovers: the bench owns this
-    // session, and run-to-run isolation wants the block manager EMPTY —
-    // including anything a future operator might persist outside the
-    // tracked-checkpoint path.
-    // The recurring q23-adjacent probe spikes (0.2-0.3 s against a
-    // ~0.09 quiet median, visible in every committed artifact through
-    // r11's first quiet recording) are SOLVED as of round 11: measured
-    // decay profile after q23 (three rounds, reproducible) is first
-    // post-release probe 0.28-0.29 s, second-onward 0.09 — a
-    // deterministic ONE-SHOT wake inside the bench's own
-    // release-then-run seam (async cleaner/listener backlog from the
-    // iterative query's many jobs draining under the next task batch),
-    // not external contention and not collectible GC debt (the r10
-    // System.gc() A/B measured equal-or-slower). Mitigation: every gate
-    // probe is preceded by an untimed SETTLE probe that absorbs the
-    // wake; the settle reading is recorded per query
-    // (`probe_settle_sec`) but excluded from the gating pool and the
-    // series, so the gate and the artifact's probe stats measure the
-    // MACHINE, and the 10 spurious q23/q40-shaped retries per quiet run
-    // (3 extra heavy runs each) stop firing.
+    // Untimed, BLOCKING release of everything the last measurement left
+    // persisted. The similarity family localCheckpoints intermediates,
+    // and dead checkpoint blocks left resident make late queries pay
+    // block-manager eviction churn (measured: q22's scaling full point
+    // 13.2 s at the end of a 49-query run vs 6.6 s in a short session,
+    // identical candidate counts). An async unpersist would move the
+    // removal cost into the next timed run. releaseAll, not the scoped
+    // releaseLeftovers: the bench owns this session.
     def releaseLeftovers(): Unit = try {
       graft.core.SessionHygiene.releaseAll(spark)
       ()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] leftover release failed: ${e.getMessage}")
+    }
+    def timed(df: => DataFrame): Double = {
+      val t0 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      (System.nanoTime() - t0) / 1e9
     }
     val probeStart = probeOnce()
     var failed = List.empty[String]
@@ -326,17 +250,25 @@ object Bench {
     // compares against, and the min/median/max the artifact reports.
     // Hot probes are INCLUDED: under blanket contention the median rises
     // and the gate stops retrying (retries can't help there), while the
-    // probe stats still expose the condition to the judge.
+    // probe stats still expose the condition.
     val probesSeen = scala.collection.mutable.ArrayBuffer(probeStart)
     def probeMedian(): Double = { val s = probesSeen.sorted; s(s.size / 2) }
+    /** Probes after a measurement and admits the reading to the pool;
+      * `hot` compares it against the median BEFORE admission, so one hot
+      * window can't vote itself normal. Returns (probe, median, hot).
+      */
+    def gateProbe(): (Double, Double, Boolean) = {
+      val p = probeOnce()
+      val median = probeMedian()
+      probesSeen += p
+      (p, median, p > 2.0 * median)
+    }
     // the heavy similarity set swings the most under contention; give it
     // one extra chance to land a quiet run
     val heavy = Set("q22_person_match_self", "q23_person_clustering",
       "q27_ngram_jaccard_dedup", "q34_minhash_preclustering")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) =>
-        onlySelects(only, name)
-      }
+      .filter { case (name, _) => onlySelects(only, name) }
     if (only.isDefined && selected.isEmpty)
       return Left(
         s"[bench] SPARK_GRAFT_ONLY=${only.get.mkString(",")} matched no query " +
@@ -346,10 +278,8 @@ object Bench {
       val probeBefore = probesSeen.last
       def once(): Either[Double, Double] = {
         val t0 = System.nanoTime()
-        val r = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Right((System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
+        val r = try Right(timed(fn(spark, sfDir)))
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           Left((System.nanoTime() - t0) / 1e9)
         }
@@ -357,43 +287,28 @@ object Bench {
         r
       }
       val n = if (heavy(name)) bestOf.max(3) else bestOf
-      // settle probe first (untimed, not admitted to the gating pool):
-      // absorbs the bench's own one-shot post-release wake so the gate
-      // probe reads the machine — see the releaseLeftovers note
-      def attempt(): (Seq[Either[Double, Double]], Double, Double) =
-        ((1 to n).map(_ => once()), probeOnce(), probeOnce())
-      val (runs1, settle1, probe1) = attempt()
-      // gate BEFORE admitting probe1 to the pool, so one hot window
-      // can't vote itself normal; bounded to ONE retry per query
-      val gateMedian = probeMedian() // BEFORE admitting probe1 (else a hot probe votes itself normal)
-      val hot = probe1 > 2.0 * gateMedian
-      probesSeen += probe1
+      val runs1 = (1 to n).map(_ => once())
+      val (probe1, gateMedian, hot) = gateProbe()
+      // bounded to ONE retry per query
       val retry = if (hot) {
         System.err.println(f"[bench] $name probe $probe1%.3f s > 2x median " +
           f"$gateMedian%.3f s - contended window, re-measuring once")
         contended ::= name
-        val a = attempt()
-        probesSeen += a._3
-        Some(a)
+        val runs2 = (1 to n).map(_ => once())
+        Some((runs2, gateProbe()._1))
       } else None
       val allRuns = runs1 ++ retry.map(_._1).getOrElse(Seq.empty)
       val ok = allRuns.collect { case Right(t) => t }
       if (ok.isEmpty) failed ::= name
       else if (allRuns.exists(_.isLeft)) flaky ::= name
       val best = if (ok.nonEmpty) ok.min else allRuns.collect { case Left(t) => t }.max
-      QueryTiming(name, best, runs1.map(_.merge), probeBefore, settle1, probe1,
-        retry.map(_._1.map(_.merge)).getOrElse(Seq.empty),
-        retry.map(_._2), retry.map(_._3))
+      QueryTiming(name, best, runs1.map(_.merge), probeBefore, probe1,
+        retry.map(_._1.map(_.merge)).getOrElse(Seq.empty), retry.map(_._2))
     }
     val total = results.map(_.bestSec).sum
     def strArr(xs: List[String]) = xs.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val failedJson = strArr(failed)
-    val flakyJson = strArr(flaky)
-    val contendedJson = strArr(contended)
-    // probe min/median/max are computed AFTER every pass (main, scaling,
-    // sf1) so the stats describe the same window the series does — a
-    // snapshot here would silently exclude the later passes' probes and
-    // understate a run whose tail hit a noisy window
+    // computed AFTER every pass, so the stats describe the same window
+    // the series does
     def probeStats: (Double, Double, Double) = {
       val s = probesSeen.toSeq.sorted
       (s.head, s(s.size / 2), s.last)
@@ -401,385 +316,116 @@ object Bench {
 
     // Scale-growth measurement: similarity + dedup families timed fresh
     // at quarter, half and full corpus, back to back in the same warm
-    // JVM — THREE points = TWO data-doublings, so a judge sees curvature
-    // (is the exponent rising?) and not just one slope. The capped dedup
-    // pair q24/q26 runs with graft.bench.docs.cap=5000 so "full" means
-    // 5000 docs, not the 2500 main-pass cap — the only way those two see
-    // corpus growth (q34's corpus is frac-sampled from `part`, so the
-    // docs cap is a no-op there and it scales like the rest). Exponent
-    // per doubling: near-linear plans stay ≲ 1, quadratic blowups read
-    // ≈ 2. For q22 the artifact also records the surviving CANDIDATE
-    // PAIR count per scale point (via the blocking stage's observe()
-    // metric) so the exponents are attributable: seconds growing in
-    // step with candidates = the join densifying, NOT the kernel
-    // getting slower. Untimed for `total`; skipped under
-    // SPARK_GRAFT_ONLY or SPARK_GRAFT_SCALING=0.
+    // JVM — THREE points = TWO data-doublings, so curvature (is the
+    // exponent rising?) shows, not just one slope. The capped dedup pair
+    // q24/q26 runs with graft.bench.docs.cap=5000 so "full" means 5000
+    // docs, not the 2500 main-pass cap — the only way those two see
+    // corpus growth. Exponent per doubling: near-linear plans stay ≲ 1,
+    // quadratic blowups read ≈ 2. For q22 the artifact also records the
+    // CANDIDATE PAIR count per scale point, so seconds growing in step
+    // with candidates read as the join densifying, NOT the kernel
+    // getting slower. Untimed for `total`.
     val scalingTargets = Seq("q22_person_match_self", "q23_person_clustering",
       "q25_minhash_dedup", "q27_ngram_jaccard_dedup", "q31_ann_lsh_topk",
       "q34_minhash_preclustering", "q35_cosine_near_dup",
-      // media representative: per-row demux+decode should read ~linear
-      // (exponent ≈ 1), the contrast class to the join-shaped families
+      // media representative: per-row demux+decode should read ~linear,
+      // the contrast class to the join-shaped families
       "q44_video_frame_decode",
-      // r19: the round's two heaviest newcomers — q60 (cluster tools:
-      // real iterative CC over the merge graph + the pairwise quality
-      // kernel) and q61 (best-match dedupe join) — so the bench's
-      // heaviest query carries measured growth, not an argued audit
+      // the heaviest cluster-tools and best-match dedupe queries
       "q60_cluster_tools_matrix", "q61_dedupe_targets")
     val liftedCapTargets = Seq("q24_exact_dedup", "q26_simhash_dedup")
-    // "0" = never, "force" = even under SPARK_GRAFT_ONLY (focused
-    // iteration on one query's scaling behavior), default = full runs only
     val doScaling = cfg("SPARK_GRAFT_SCALING", "1") match {
       case "0"     => false
       case "force" => true
       case _       => only.isEmpty
     }
-    // candidate counts per frac for q22 (deterministic per frac, so last
-    // write per frac wins harmlessly across the two passes). The counter
-    // counts bucket-join emissions, i.e. the pairs scored: a pair sharing
-    // k surviving buckets counts k times (PersonMatching.lastCandidateObservation)
+    // q22 candidate counts per frac. The counter counts bucket-join
+    // emissions, i.e. the pairs scored: a pair sharing k surviving
+    // buckets counts k times (PersonMatching.lastCandidateObservation)
     val q22Pairs = scala.collection.mutable.Map.empty[Double, Long]
     def lastCandidateCount(): Option[Long] =
-      Option(graft.linkage.PersonMatching.lastCandidateObservation)
+      Option(PersonMatching.lastCandidateObservation)
         .flatMap(o => scala.util.Try(o.get("candidate_pairs")).toOption)
         .map(_.asInstanceOf[Number].longValue)
-    // scaling points the probe gate re-measured ("name@frac"), in-band
-    // like the main pass's contention_retries (r8's only misleading
-    // number came from the then-ungated scaling pass)
+    /** One UNTIMED run with the candidate counter on; the counter stays
+      * out of the timed runs so those keep the exact production plan.
+      */
+    def countedRun(df: => DataFrame, props: (String, String)*): Option[Long] =
+      withProps((PersonMatching.CountCandidatesProp -> "1") +: props: _*) {
+        try {
+          df.write.format("noop").mode("overwrite").save()
+          lastCandidateCount()
+        } finally releaseLeftovers()
+      }
+    def fracProps(frac: Double): Seq[(String, String)] =
+      if (frac < 1.0) Seq(ScaleKnob.Prop -> frac.toString) else Seq.empty
+    // scaling points the probe gate re-measured ("name@frac")
     var scalingRetries = List.empty[String]
-    // q22 cap-engagement demo: (cap, candidate_pairs, dropped_bucket_rows)
-    // at full corpus for the default and a tightened maxBucketSize
+    // q22 cap engagement: (cap, candidate_pairs, dropped_bucket_rows) at
+    // full corpus for the default and a tightened maxBucketSize
     var capDemo = List.empty[(Int, Long, Long)]
-    // q22 LCS-kernel A/B demo (r16 verdict task 2): JSON fragment, empty
-    // when the demo did not run (no long docs / demo failed)
-    var lcsDemo = ""
-    // q23 degenerate-corpus demo (the cap_demo analog for clustering):
-    // JSON fragments for the chain (connected-components algorithm A/B)
-    // and hot-component (oversized-fallback knob A/B) runs
-    var clusterDemoChain = List.empty[String]
-    var clusterDemoFallback = List.empty[String]
-    // label-vs-star A/B on the REAL blocked q23 corpus (not the
-    // synthetic chain): documents how the two behave on
-    // production-shaped graphs (entity-sized components, tiny
-    // diameters — both converge in 1-2 rounds, delta small) — the
-    // chain demo alone only shows where star wins
-    var clusterDemoCorpus = List.empty[String]
     // (name, quarter_sec, half_sec, full_sec)
     val scaling: Seq[(String, Double, Double, Double)] =
       if (!doScaling) Seq.empty
       else (scalingTargets.map((_, false)) ++ liftedCapTargets.map((_, true)))
-        // under force+ONLY, scale just the filtered queries — the whole
-        // point of the combination is focused iteration on one query
-        .filter { case (name, _) =>
-          onlySelects(only, name)
-        }
+        // under force+ONLY, scale just the filtered queries
+        .filter { case (name, _) => onlySelects(only, name) }
         .flatMap { case (name, liftCap) =>
           SparkEntry.queries.get(name).flatMap { fn =>
-            def timeIt(): Double = {
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            }
-            def atFrac(frac: Double): Double = {
-              if (frac < 1.0) sys.props(graft.core.ScaleKnob.Prop) = frac.toString
-              try timeIt() finally {
-                sys.props.remove(graft.core.ScaleKnob.Prop)
-                releaseLeftovers() // untimed, same isolation as the main pass
+            def atFrac(frac: Double): Double =
+              withProps(fracProps(frac): _*) {
+                try timed(fn(spark, sfDir)) finally releaseLeftovers()
               }
-            }
-            // probe-gated retry, same contract as the main pass: a hot
-            // probe right after a measurement means that measurement may
-            // be contention-inflated, so re-measure the POINT once and
-            // keep the min. Bounded to one retry per (query, point)
-            // across both interleaved passes — under blanket contention
-            // the rising probe median disarms the gate exactly as in the
-            // main pass.
+            // probe-gated retry, same contract as the main pass, bounded
+            // to one retry per (query, point) across both passes
             val retriedPoints = scala.collection.mutable.Set.empty[Double]
             def atFracGated(frac: Double): Double = {
               val t = atFrac(frac)
-              probeOnce() // untimed settle, as in the main pass
-              val p = probeOnce()
-              val gateMedian = probeMedian() // before admitting p, as in the main pass
-              val hot = p > 2.0 * gateMedian
-              probesSeen += p
+              val (p, gateMedian, hot) = gateProbe()
               if (hot && !retriedPoints(frac)) {
                 retriedPoints += frac
                 scalingRetries ::= s"$name@$frac"
                 System.err.println(f"[bench] scaling $name@$frac probe $p%.3f s > " +
                   f"2x median $gateMedian%.3f s - contended window, re-measuring point once")
                 val t2 = atFrac(frac)
-                probeOnce() // settle
-                val p2 = probeOnce()
-                probesSeen += p2
+                gateProbe()
                 math.min(t, t2)
               } else t
             }
-            try {
-              if (liftCap) sys.props(graft.core.ScaleKnob.DocsCapProp) = "5000"
-              try {
-                // best of 2 per point, INTERLEAVED (q,h,f, q,h,f) rather
-                // than point-at-a-time: single-shot wall times at these
-                // sizes swing with JIT/GC enough to flip a ratio by 2x,
-                // and consecutive same-point runs share any noisy window,
-                // poisoning that point's best and fabricating curvature.
-                // Interleaving spreads each window across all three
-                // points, so min-per-point discards it.
-                val passes = Seq.fill(2)(Seq(0.25, 0.5, 1.0).map(atFracGated))
-                // q22 attribution: one UNTIMED run per scale point with
-                // the candidate counter enabled — counts are
-                // deterministic per frac, and keeping the counter out of
-                // the timed runs keeps those the exact production plan
-                if (name == "q22_person_match_self") {
-                  sys.props(graft.linkage.PersonMatching.CountCandidatesProp) = "1"
-                  try Seq(0.25, 0.5, 1.0).foreach { frac =>
-                    if (frac < 1.0) sys.props(graft.core.ScaleKnob.Prop) = frac.toString
-                    try {
-                      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                      lastCandidateCount().foreach(q22Pairs(frac) = _)
-                    } finally {
-                      sys.props.remove(graft.core.ScaleKnob.Prop)
-                      releaseLeftovers()
-                    }
-                  } finally
-                    sys.props.remove(graft.linkage.PersonMatching.CountCandidatesProp)
-                  // CAP-ENGAGEMENT DEMO (untimed, full corpus): the
-                  // candidate growth above is quadratic-by-construction
-                  // (fixed vocabulary densifies the buckets); this shows
-                  // the maxBucketSize safety valve actually bounding it
-                  // on the REAL corpus, not just the synthetic spec
-                  // fixture — one run at the default cap, one at a
-                  // tightened cap, candidate pairs and per-side drop
-                  // counts from the same observe() metrics either way.
-                  val defaultCap = graft.linkage.PersonMatching.MatchConfig().maxBucketSize
-                  val tightCap = cfgInt("SPARK_GRAFT_CAP_DEMO_BUCKET", 64, min = 1)
-                  def countsAtCap(cap: Int): Option[(Int, Long, Long)] = try {
-                    graft.linkage.PersonMatching.lastDropObservationsBySide = Map.empty
-                    sys.props(graft.linkage.PersonMatching.CountCandidatesProp) = "1"
-                    sys.props(graft.linkage.PersonMatching.MaxBucketSizeOverrideProp) = cap.toString
-                    try {
-                      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                      val drops = graft.linkage.PersonMatching.lastDropObservationsBySide
-                        .values.toSeq
-                        .flatMap(o => scala.util.Try(o.get("dropped_bucket_rows")).toOption)
-                        .map(_.asInstanceOf[Number].longValue).sum
-                      lastCandidateCount().map((cap, _, drops))
-                    } finally {
-                      sys.props.remove(graft.linkage.PersonMatching.CountCandidatesProp)
-                      sys.props.remove(graft.linkage.PersonMatching.MaxBucketSizeOverrideProp)
-                      releaseLeftovers()
-                    }
-                  } catch { case e: Throwable =>
-                    System.err.println(s"[bench] cap demo at $cap failed: ${e.getMessage}")
-                    None
-                  }
-                  capDemo = List(countsAtCap(defaultCap), countsAtCap(tightCap)).flatten
-                  // LCS KERNEL A/B DEMO (r16 verdict task 2; untimed re
-                  // headline): q22's end-to-end time barely moved with
-                  // the r16 bit-parallel kernel because the
-                  // duplicate-heavy corpus short-circuits most pairs on
-                  // the pa == pb fast path before the kernel runs — the
-                  // 4.6–43× microbench win had no artifact. This scores
-                  // a seeded batch of NON-identical long-text pairs
-                  // through the REGISTERED UDFs (fuzz_ratio +
-                  // token_set_ratio, the production call path), once
-                  // per kernel via the demo-only Fuzz.useDpKernelForDemo
-                  // switch (volatile write happens-before the job that
-                  // reads it; reset in a finally), best of 2 per
-                  // kernel, and records both wall times plus an
-                  // order-independent score checksum (sum of
-                  // round(score*1e4) as long — both kernels compute the
-                  // same LCS int, so equality is exact, not FP-lucky).
-                  // Mutation = vowel rotation: nearly every token
-                  // differs, so the full-string Indel AND the token-set
-                  // diff joins do real kernel work instead of skipping
-                  // via pa == pb / equal-token-set fast paths, while
-                  // the LCS stays high (consonant skeleton intact) —
-                  // the near-dup shape dedup workloads actually score.
-                  try {
-                    import org.apache.spark.sql.functions.{col, expr, translate, length => slen}
-                    // the kernel switch is a plain @volatile on the driver
-                    // JVM: with a non-local master the executors would
-                    // never see the DP flag and the A/B would silently
-                    // compare the bit-parallel kernel against itself
-                    // (~1.0x, scores trivially matching) — skip rather
-                    // than record a meaningless comparison; the recorded
-                    // master makes the precondition auditable
-                    if (!spark.sparkContext.isLocal)
-                      throw new IllegalStateException(
-                        s"lcs_demo requires a local master (got ${spark.sparkContext.master}): " +
-                          "Fuzz.useDpKernelForDemo does not propagate to remote executors")
-                    // 1024 pairs: at 256 the two jobs' fixed launch cost
-                    // (~0.1 s/side) still compressed the measured ratio to
-                    // 2.9x; at 1024 the kernel dominates both sides
-                    val nPairs = cfgInt("SPARK_GRAFT_LCS_DEMO_PAIRS", 1024, min = 1)
-                    val capChars = cfgInt("SPARK_GRAFT_LCS_DEMO_CHARS", 1200, min = 65)
-                    graft.functions.Udfs.register(spark)
-                    // rpad(text, cap, text) = the doc repeated cyclically
-                    // to EXACTLY capChars: sf0.01 docs average ~360 chars,
-                    // and at that length the fixed job overhead (~40 ms)
-                    // drowns the kernel delta (measured speedup 1.2x where
-                    // the kernel's own is >10x) — uniform long inputs make
-                    // the demo measure the kernel, not the job launch
-                    // SQL expr: the Scala rpad() overloads take only a
-                    // literal pad string, not a per-row Column
-                    val padded = expr(s"rpad(text, $capChars, text)")
-                    val pairs = graft.core.Tables.documents(spark, sfDir)
-                      .where(slen(col("text")) >= 200)
-                      .orderBy(col("doc_id")).limit(nPairs)
-                      .select(padded.as("a"),
-                        translate(padded, "aeiou", "eioua").as("b"))
-                      .cache()
-                    // unpersist in a finally: a throw from scoreOnce/
-                    // kernelRun must not leak the cached blocks into the
-                    // rest of the bench run
-                    try {
-                      val stats = pairs.selectExpr(
-                        "count(*) AS n", "avg(length(a)) AS chars").head()
-                      val actualPairs = stats.getLong(0)
-                      if (actualPairs > 0) {
-                        val avgChars = stats.getDouble(1)
-                        def scoreOnce(): (Double, Long) = {
-                          val t0 = System.nanoTime()
-                          val r = pairs.selectExpr(
-                            "sum(cast(round(fuzz_ratio(a, b) * 10000, 0) AS bigint)) AS s1",
-                            "sum(cast(round(token_set_ratio(a, b) * 10000, 0) AS bigint)) AS s2").head()
-                          ((System.nanoTime() - t0) / 1e9, r.getLong(0) * 31L + r.getLong(1))
-                        }
-                        def kernelRun(dp: Boolean): (Double, Long) = {
-                          graft.functions.Fuzz.useDpKernelForDemo = dp
-                          try {
-                            val rs = Seq.fill(2)(scoreOnce())
-                            (rs.map(_._1).min, rs.head._2)
-                          } finally graft.functions.Fuzz.useDpKernelForDemo = false
-                        }
-                        val (bpSec, bpSum) = kernelRun(dp = false)
-                        val (dpSec, dpSum) = kernelRun(dp = true)
-                        lcsDemo = s""","lcs_demo":{"pairs":$actualPairs,"avg_chars":${f3(avgChars)},"text_cap_chars":$capChars,"master":"${jstr(spark.sparkContext.master)}","mutation":"doc repeated cyclically to text_cap_chars (rpad), then vowel-rotated (translate aeiou->eioua) against itself: every token differs, so the Indel and token-set-diff kernels run on full-length text instead of short-circuiting on pa == pb / equal token sets","udfs":["fuzz_ratio","token_set_ratio"],"best_of":2,"bitparallel_sec":${f3(bpSec)},"dp_sec":${f3(dpSec)},"speedup":${f3(dpSec / bpSec)},"scores_match":${bpSum == dpSum},"score_checksum":$bpSum}"""
-                        if (bpSum != dpSum)
-                          System.err.println(s"[bench] LCS DEMO KERNEL MISMATCH: bitparallel checksum $bpSum vs dp $dpSum")
-                      }
-                    } finally {
-                      pairs.unpersist()
-                      releaseLeftovers()
-                    }
-                  } catch { case e: Throwable =>
-                    System.err.println(s"[bench] lcs demo failed: ${e.getMessage}")
-                  }
+            try withProps((if (liftCap) Seq(ScaleKnob.DocsCapProp -> "5000") else Nil): _*) {
+              // best of 2 per point, INTERLEAVED (q,h,f, q,h,f): a noisy
+              // window then spreads across all three points and
+              // min-per-point discards it, instead of poisoning one
+              // point's best and fabricating curvature
+              val passes = Seq.fill(2)(Seq(0.25, 0.5, 1.0).map(atFracGated))
+              if (name == "q22_person_match_self") {
+                Seq(0.25, 0.5, 1.0).foreach { frac =>
+                  countedRun(fn(spark, sfDir), fracProps(frac): _*).foreach(q22Pairs(frac) = _)
                 }
-                // DEGENERATE-CORPUS DEMO for q23 (untimed re headline;
-                // each run carries its own wall time): the clustering
-                // family's two documented degenerate shapes, each at two
-                // knob settings, so the mitigations have recorded bench
-                // evidence, not just specs.
-                // (1) long chain — min-label propagation is O(diameter)
-                // rounds and stops short at its default maxIter (loud,
-                // mid-propagation labels), the opt-in large-star/
-                // small-star contraction converges in O(log n) rounds;
-                // (2) hot component (N identical persons) — the exact
-                // greedy replay buffers the component, the tightened
-                // maxComponentSize knob engages the streamed
-                // single-linkage fallback (counted in the oversized
-                // accumulator).
-                if (name == "q23_person_clustering") {
-                  import org.apache.spark.sql.functions.{col, countDistinct, lit}
-                  def timed(f: => Unit): Double = {
-                    val t0 = System.nanoTime()
-                    f
-                    (System.nanoTime() - t0) / 1e9
+                // the cap bounding candidates on the REAL corpus: one run
+                // at the default cap, one at a tightened cap, candidate
+                // pairs and per-side drop counts from the same observe()
+                // metrics either way
+                val defaultCap = PersonMatching.MatchConfig().maxBucketSize
+                val tightCap = cfgInt("SPARK_GRAFT_CAP_DEMO_BUCKET", 64, min = 1)
+                def countsAtCap(cap: Int): Option[(Int, Long, Long)] = try {
+                  PersonMatching.lastDropObservationsBySide = Map.empty
+                  countedRun(fn(spark, sfDir),
+                    PersonMatching.MaxBucketSizeOverrideProp -> cap.toString).map { pairs =>
+                    val drops = PersonMatching.lastDropObservationsBySide.values.toSeq
+                      .flatMap(o => scala.util.Try(o.get("dropped_bucket_rows")).toOption)
+                      .map(_.asInstanceOf[Number].longValue).sum
+                    (cap, pairs, drops)
                   }
-                  try {
-                    val chainN = cfgInt("SPARK_GRAFT_CLUSTER_DEMO_CHAIN", 4096, min = 16)
-                    // small enough that label propagation CONVERGES: an
-                    // n-vertex path has diameter n-1 and min-label needs
-                    // diameter rounds plus one to detect the fixpoint, so
-                    // the default must satisfy n <= maxIter - 1 (= 24 at
-                    // the label loop's default 25). 16 gives both
-                    // algorithms a converged run — the
-                    // converged-vs-converged time point. (r15 shipped 64
-                    // here, whose diameter 63 > 25 made the "control"
-                    // unconverged too.)
-                    val chainSmall = cfgInt("SPARK_GRAFT_CLUSTER_DEMO_CHAIN_SMALL", 16, min = 4)
-                    def chainRun(n: Int, algo: String): String = {
-                      val vertices = spark.range(0, n.toLong).toDF()
-                      val edges = spark.range(0, n.toLong - 1)
-                        .select(col("id").as("a"), (col("id") + lit(1L)).as("b"))
-                      val sec = timed {
-                        val labels =
-                          if (algo == "star")
-                            graft.linkage.Clustering.connectedComponentsStar(vertices, edges)
-                          else
-                            graft.linkage.Clustering.connectedComponents(vertices, edges)
-                        labels.write.format("noop").mode("overwrite").save()
-                      }
-                      releaseLeftovers() // untimed, same isolation as the main pass
-                      s"""{"n":$n,"algorithm":"$algo","sec":${f3(sec)},""" +
-                        s""""rounds":${graft.linkage.Clustering.lastCcRounds},""" +
-                        s""""converged":${graft.linkage.Clustering.lastCcConverged}}"""
-                    }
-                    // label on the LONG chain runs at its default maxIter
-                    // on purpose: the recorded converged=false + 25
-                    // rounds IS the evidence for why the star variant
-                    // exists (letting it converge would take n rounds)
-                    clusterDemoChain = List(
-                      chainRun(chainN, "star"), chainRun(chainN, "label"),
-                      chainRun(chainSmall, "star"), chainRun(chainSmall, "label"))
-                    val hotN = cfgInt("SPARK_GRAFT_CLUSTER_DEMO_HOT", 400, min = 8)
-                    def fallbackRun(maxComp: Int): String = {
-                      val hot = spark.range(1, hotN.toLong + 1)
-                        .select(col("id"),
-                          lit("maria").as("strGName_processed"),
-                          lit("kovac").as("strLName_processed"),
-                          lit("19210505").as("strDoB_processed"),
-                          lit("brno").as("strPoB_processed"),
-                          lit(null).cast("string").as("prisoner_number"))
-                      var clusters = -1L
-                      val sec = timed {
-                        val out = graft.linkage.Clustering.cluster(hot,
-                          graft.linkage.Clustering.ClusterConfig(
-                            cutoff = 90.0, maxComponentSize = maxComp))
-                        clusters = out.select(countDistinct(col("cluster_id"))).head().getLong(0)
-                      }
-                      val oversized =
-                        Option(graft.linkage.Clustering.lastOversizedAccumulator)
-                          .map(_.value.longValue).getOrElse(-1L)
-                      releaseLeftovers()
-                      s"""{"max_component_size":$maxComp,"rows":$hotN,"sec":${f3(sec)},""" +
-                        s""""oversized_components":$oversized,"clusters":$clusters}"""
-                    }
-                    val defaultMax = graft.linkage.Clustering.ClusterConfig().maxComponentSize
-                    val tightMax = cfgInt("SPARK_GRAFT_CLUSTER_DEMO_MAXCOMP", 100, min = 1)
-                    clusterDemoFallback = List(fallbackRun(defaultMax), fallbackRun(tightMax))
-                    // real-corpus A/B: the exact q23 pipeline (same
-                    // corpus, same cutoff) with only ccAlgorithm varied;
-                    // everything else identical, so the wall-time delta
-                    // is the algorithm's. On this corpus components are
-                    // entity-sized (mostly pairs), so BOTH converge in
-                    // 1-2 rounds and the delta is small — which is
-                    // itself the documentation: the default choice is
-                    // not load-bearing on production-shaped graphs, and
-                    // star only matters on degenerate chains (the demo
-                    // above). Record rounds so the artifact shows why.
-                    def corpusRun(algo: String): String = {
-                      val corpus = graft.queries.Linkage.doubledCorpus(spark, sfDir)
-                      val sec = timed {
-                        graft.linkage.Clustering.cluster(corpus,
-                            graft.linkage.Clustering.ClusterConfig(
-                              cutoff = 99.0, ccAlgorithm = algo))
-                          .write.format("noop").mode("overwrite").save()
-                      }
-                      releaseLeftovers()
-                      s"""{"algorithm":"$algo","sec":${f3(sec)},""" +
-                        s""""rounds":${graft.linkage.Clustering.lastCcRounds},""" +
-                        s""""converged":${graft.linkage.Clustering.lastCcConverged}}"""
-                    }
-                    clusterDemoCorpus = List(corpusRun("label"), corpusRun("star"))
-                  } catch { case e: Throwable =>
-                    System.err.println(s"[bench] cluster demo failed: ${e.getMessage}")
-                  }
+                } catch { case e: Throwable =>
+                  System.err.println(s"[bench] cap demo at $cap failed: ${e.getMessage}")
+                  None
                 }
-                passes.transpose.map(_.min) match {
-                  case Seq(q, h, f) => Some((name, q, h, f))
-                }
-              } finally if (liftCap) sys.props.remove(graft.core.ScaleKnob.DocsCapProp)
+                capDemo = List(countsAtCap(defaultCap), countsAtCap(tightCap)).flatten
+              }
+              passes.transpose.map(_.min) match {
+                case Seq(q, h, f) => Some((name, q, h, f))
+              }
             } catch {
               case e: Throwable =>
                 System.err.println(s"[bench] scaling of $name failed: ${e.getMessage}")
@@ -789,75 +435,13 @@ object Bench {
         }
     def exp(lo: Double, hi: Double): Double = math.log(hi / lo) / math.log(2)
 
-    // in-band cross-check: a scaling target's full point and its
-    // main-pass entry time the SAME query on the SAME corpus, so a big
-    // disagreement in either direction means one of the two was
-    // measured in a window the probes didn't catch — flag it so a judge
-    // never has to diff the two sections by hand (r8: q22 main 7.55 s vs
-    // scaling full 28.3 s sat unflagged in one artifact). Threshold 2x,
-    // not 1.5x: the two sections measure under different JVM-warmness
-    // and interleaving conditions, and quiet-machine divergence reaches
-    // 1.63x on sub-2s queries (q31, committed r8 BENCH_FULL) with zero
-    // contention — a 1.5x gate would cry wolf on every quiet run, and
-    // the real r8 incident read 3.75x. The lifted-cap pair is excluded:
-    // its full point runs a 2x-larger docs corpus than the main pass by
-    // design.
-    val mainBestByName = results.map(r => r.name -> r.bestSec).toMap
-    val consistency: Seq[(String, Double, Double)] = scaling.flatMap {
-      case (n, _, _, f) =>
-        if (liftedCapTargets.contains(n)) None
-        else mainBestByName.get(n).filter(b => f > 2.0 * b || b > 2.0 * f)
-          .map(b => (n, b, f))
-    }
-    consistency.foreach { case (n, b, f) =>
-      System.err.println(f"[bench] CONSISTENCY: $n main best $b%.3f s vs " +
-        f"scaling full $f%.3f s (${math.max(f / b, b / f)}%.2fx) - one side contended")
-    }
-    // SELF-REPAIR, not just report (r9 recorded q44 at 19.0 s in
-    // `queries` while the same artifact held a 2.5 s scaling full point
-    // for the identical query+corpus): `best_known_sec` is the min over
-    // EVERY successful measurement of the same query+corpus this run
-    // holds — the main best (itself the min over the best-of-N batch
-    // plus any contention-retry batch) and the scaling pass's full
-    // point (itself the min over its interleaved passes plus gated
-    // point retries). Contention only inflates, so min is the same
-    // monotone estimator the retry gate relies on. Taking it for every
-    // scaled query, not just the >2x-flagged ones, closes the r10 gap
-    // where q27 sat at ratio 1.91x — under the consistency gate, so no
-    // repair fired — while the artifact itself held an 8.55 s scaling
-    // observation against the 16.3 s recorded best. The lifted-cap pair
-    // is excluded (its full point runs a 2x-larger corpus by design),
-    // as is scaling_sf1 (a replicated corpus, never comparable). Both
-    // raw sections stay untouched; `total_best_known` restates the
-    // headline with every query at its best-known number.
-    val secondObservation: Map[String, Double] = scaling.collect {
-      case (n, _, _, f) if !liftedCapTargets.contains(n) => n -> f
-    }.toMap
-    // failed/flaky queries are NOT repaired: their bestSec can be a
-    // failure duration, and folding a later scaling success into
-    // total_best_known would restate the headline with a time for a
-    // query the same artifact reports as broken.
-    // (bestKnown/totalBestKnown are computed AFTER the drift-repair
-    // pass below, so a drift re-measure batch feeds them too.)
-    val repairEligible = results.filterNot(r => (failed ++ flaky).contains(r.name))
-
-    // cold-vs-warm provenance: run 1 of each query pays that query's
-    // codegen/JIT even after the table warmup (see the best-of-N note up
-    // top), so the first-run-over-best spread quantifies where cold
-    // costs land — a judge comparing artifacts sees how much of any
-    // first-query number is warmup rather than kernel (README explains
-    // the q01 cold floor).
-    // failed/flaky queries are excluded: their runs mix failure
-    // durations with successes (a 0.2 s crash as "run 1" would read as
-    // a 0.04 warmup ratio and drag the median below the true cold cost).
-    // CONTENDED queries (probe gate fired) are excluded too: contention
-    // landing on run 1 reads as a huge first-over-best ratio that is
-    // neighbor noise, not cold-start cost — the contended r10 artifact
-    // recorded max_first_over_best 41.5x (q34) where the quiet truth is
-    // 3.3x, polluting exactly the provenance this block exists to give.
-    // If EVERY reliable query was contended (blanket contention), fall
-    // back to the unfiltered reliable set with a flag, so the block
-    // stays present and says why it is untrustworthy.
+    // cold-vs-warm provenance: the first-run-over-best spread quantifies
+    // where cold costs land. Failed/flaky queries are excluded (their
+    // runs mix failure durations with successes), and so are CONTENDED
+    // queries (contention landing on run 1 is neighbor noise, not
+    // cold-start cost). If EVERY reliable query was contended, fall back
+    // to the unfiltered reliable set with a flag, so the block stays
+    // present and says why it is untrustworthy.
     val unreliable = (failed ++ flaky).toSet
     val contendedSet = contended.toSet
     def ratios(excludeContended: Boolean) = results
@@ -880,30 +464,16 @@ object Bench {
         s"""{"note":"first_over_best = runs[0] / best_sec per query: run 1 pays the query's own codegen/JIT, so best-of-N reads as steady-state and this spread is the cold-start provenance; queries whose probe gate fired are excluded (their run 1 measures contention, not cold start)","median_first_over_best":${f3(med)},"max_first_over_best":${f3(maxR)},"max_query":"$maxQ"$contendedNote}"""
       }
 
-    // OPT-IN 10× pass (SPARK_GRAFT_SCALING_SF1=1, untimed for `total`):
-    // the heavy six on a corpus replicated past the largest on-disk SF
-    // via ScaleKnob's disjoint-shard construction. Exists to MEASURE the
-    // amortization claim the three-point pass can only argue: q23/q34
-    // exponents read ≈ 0 at sf0.1 because fixed per-iteration job
-    // overhead dominates their wall time — at ~10× corpus the kernel
-    // cost surfaces and the exponent (computed against the scaling
-    // pass's full point, same JVM) shows whether the plans really grow
-    // ~linearly. Off by default: it adds minutes of single-shot runs,
-    // so it is a recorded-artifact flag, not a per-round default.
-    // min 2 (factor 1 measures nothing) and max 26, matching
-    // ScaleKnob.replicate's hard bound (26 distinct Caesar rotations) —
-    // without the clamp an out-of-range factor would pass cfgInt only to
-    // throw inside every measured() call, and the whole requested pass
-    // would record null with the config error buried in six stderr lines
+    // OPT-IN 10x pass: the heavy queries on a corpus replicated past the
+    // largest on-disk SF via ScaleKnob's disjoint shards, so per-job
+    // fixed overhead amortizes and the kernel cost surfaces; exponents
+    // are computed against the scaling pass's full points. Factor
+    // clamped to [2, 26]: factor 1 measures nothing, and 26 is
+    // ScaleKnob.replicate's hard bound (distinct Caesar rotations).
     val sf1Factor = math.min(cfgInt("SPARK_GRAFT_SF1_FACTOR", 10, min = 2), 26)
     val sf1Requested = cfg("SPARK_GRAFT_SCALING_SF1", "0") != "0"
     val doSf1 = sf1Requested && scaling.nonEmpty
     if (sf1Requested && !doSf1) {
-      // two different causes, two different fixes: the pass being
-      // disabled/filtered points at the knobs; the pass RUNNING but
-      // every target failing points at the six "scaling of qNN failed"
-      // lines above — naming the wrong one sends the debugger to knobs
-      // that are already set correctly
       val cause =
         if (doScaling) "the scaling pass ran but every target failed - see the 'scaling of ... failed' lines above"
         else "the scaling pass is disabled (SPARK_GRAFT_SCALING=0 or an ONLY filter without SCALING=force)"
@@ -916,67 +486,39 @@ object Bench {
       "q60_cluster_tools_matrix", "q61_dedupe_targets")
       .filter(n => onlySelects(only, n))
     var sf1Retries = List.empty[String]
-    // q61 sf1 attribution (r22, the r20 verdict's watch item): its sf1
-    // exponent reads mildly superlinear (1.19 at 10×), and the profile
-    // shows the growth is CPU-saturated scoring, not a shuffle — these
-    // UNTIMED counted runs pin the cause to candidate-pair
-    // densification (sec-per-million-candidates stays ~flat), the same
-    // adjudication q22's scaling counter provides at the three points.
-    var q61Sf1Pairs: Option[(Long, Long)] = None // (base_full, sf1)
+    // q61 candidate pairs (base_full, sf1): UNTIMED counted runs that
+    // attribute its sf1 growth to candidate densification vs kernel cost
+    var q61Sf1Pairs: Option[(Long, Long)] = None
+    val replicated = ScaleKnob.ReplicateProp -> sf1Factor.toString
     val scalingSf1: Seq[(String, Double)] =
       if (!doSf1) Seq.empty
       else sf1Targets.flatMap { name =>
         SparkEntry.queries.get(name).flatMap { fn =>
-          def measured(): Double = {
-            sys.props(graft.core.ScaleKnob.ReplicateProp) = sf1Factor.toString
-            try {
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            } finally {
-              sys.props.remove(graft.core.ScaleKnob.ReplicateProp)
-              releaseLeftovers()
+          def measured(): Double =
+            withProps(replicated) {
+              try timed(fn(spark, sfDir)) finally releaseLeftovers()
             }
-          }
           try {
-            // single-shot + the same probe-gated one-retry as everywhere
-            // else: at this size a second unconditional run costs more
-            // than the noise it would remove
+            // single-shot + the same probe-gated one retry: at this size
+            // a second unconditional run costs more than the noise it
+            // would remove
             val t = measured()
-            probeOnce() // untimed settle, as in the main pass
-            val p = probeOnce()
-            val gateMedian = probeMedian()
-            val hot = p > 2.0 * gateMedian
-            probesSeen += p
+            val (p, gateMedian, hot) = gateProbe()
             val best = if (hot) {
               sf1Retries ::= name
               System.err.println(f"[bench] sf1 $name probe $p%.3f s > 2x median " +
                 f"$gateMedian%.3f s - contended window, re-measuring once")
               val t2 = measured()
-              probeOnce() // settle
-              probesSeen += probeOnce()
+              gateProbe()
               math.min(t, t2)
             } else t
-            if (name == "q61_dedupe_targets") {
+            if (name == "q61_dedupe_targets")
               try {
-                sys.props(graft.linkage.PersonMatching.CountCandidatesProp) = "1"
-                def countAt(rep: Option[Int]): Option[Long] = {
-                  rep.foreach(r => sys.props(graft.core.ScaleKnob.ReplicateProp) = r.toString)
-                  try {
-                    fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                    lastCandidateCount()
-                  } finally {
-                    rep.foreach(_ => sys.props.remove(graft.core.ScaleKnob.ReplicateProp))
-                    releaseLeftovers()
-                  }
-                }
-                for (b <- countAt(None); s <- countAt(Some(sf1Factor)))
+                for (b <- countedRun(fn(spark, sfDir)); s <- countedRun(fn(spark, sfDir), replicated))
                   q61Sf1Pairs = Some((b, s))
               } catch { case e: Throwable =>
                 System.err.println(s"[bench] q61 sf1 candidate count failed: ${e.getMessage}")
-              } finally
-                sys.props.remove(graft.linkage.PersonMatching.CountCandidatesProp)
-            }
+              }
             Some((name, best))
           } catch { case e: Throwable =>
             System.err.println(s"[bench] sf1 scaling of $name failed: ${e.getMessage}")
@@ -1002,11 +544,6 @@ object Bench {
         s""","factor":$sf1Factor,"retries":${strArr(sf1Retries)},"corpus":"disjoint-shard replication (ScaleKnob.ReplicateProp): ids remapped, per-copy letter Caesar on strings, per-copy rotation on float arrays - each shard isomorphic to the base corpus, cross-shard buckets disjoint, so candidates grow ~factor x like real data growth","note":"growth_exponent = log(sf1_sec / base_full_sec) / log(factor); ~1 = linear scaling. The q23/q34 near-zero exponents in `scaling` are fixed per-iteration overhead - this pass is where that claim is measured rather than argued"}""")
 
     // ---- full JSON to file: precise values, all runs, notes, caps ----
-    // q22 caveat: a SELF-match over a FIXED 8x8-word vocabulary is
-    // intrinsically quadratic in corpus size (halving rows quarters
-    // each bucket's pair count) — real name distributions grow the
-    // vocabulary with the data, which is what keeps bucket sizes and
-    // the ratio bounded; the hot-bucket cap guards the true worst case
     val note = "q22 self-matches a fixed-vocabulary corpus: candidate pairs scale " +
       "quadratically with rows by construction (buckets densify, vocabulary does not grow); " +
       "bounded by maxBucketSize, see PersonMatching.capBuckets; candidate_pairs per scale " +
@@ -1022,292 +559,30 @@ object Bench {
       "not by the kernels - the kernel cost scales with edges and the fixed " +
       "overhead amortizes at production scale"
     val caps = """{"documents_corpus":"doc_id < 2500 in the main pass (q18c/q24-q27 demo corpus); scaling pass lifts to 5000 for q24/q26 (q34's corpus is frac-sampled, the docs cap does not apply to it)"}"""
-    // DRIFT vs the committed quiet artifact (r11 verdict task 2): a query
-    // outside the scaled heavy-six holds exactly ONE measurement batch
-    // per artifact, so a probe-invisible slow window (IO/page-cache —
-    // the r11 q40 case: 3.60 s committed against 1.08 s same-code driver
-    // evidence, quiet probes both times) has no second observation for
-    // best_known to repair from. The committed artifact IS that second
-    // observation: for every query healthy in both files and measured on
-    // the SAME corpus, report
-    //   (best_sec / run probe median) / (committed best_sec / committed probe median)
-    // Normalization uses the RUN-WIDE probe medians (49+ samples each),
-    // NOT per-query probe_adjacent_sec: the 2-3-sample adjacent median
-    // swings 1.7-3.5x between back-to-back quiet runs, and dividing by
-    // it injected that noise straight into the ratio (measured: 3/49
-    // false outliers between two same-session quiet recordings, e.g.
-    // q18 best 3.52->3.33 s read as drift 0.27 purely because its
-    // bracketing probes differed 3.5x). The run-wide median still
-    // cancels host speed — which is the cross-host property drift needs
-    // — while a per-query hot window is ALREADY the retry gate's job,
-    // not drift's. Advisory bookkeeping over data the two files hold
-    // (no new measurement, never folded into value/total_best_known:
-    // the committed number is a different JVM and code revision, so
-    // unlike the within-run consistency repair it can only FLAG, not
-    // restate). SPARK_GRAFT_BENCH_COMMITTED retargets the reference
-    // ("" disables); the default is the committed artifact at the repo
-    // root.
-    val committedPath = cfg("SPARK_GRAFT_BENCH_COMMITTED", "BENCH_FULL.json")
-    val committedPathExplicit = cfg("SPARK_GRAFT_BENCH_COMMITTED", "") == committedPath
-    // (bestSec map, committed probe median, committed started_utc)
-    val committedRef: Option[(Map[String, Double], Double, String)] =
-      if (committedPath.isEmpty) None
-      else if (!new java.io.File(committedPath).isFile) {
-        // silent only for the missing DEFAULT (a fresh checkout has no
-        // committed artifact); a path someone typed must not vanish
-        // into a "drift ran clean"-shaped null
-        if (committedPathExplicit)
-          System.err.println(s"[bench] SPARK_GRAFT_BENCH_COMMITTED=$committedPath does not exist - drift_vs_committed skipped")
-        None
-      } else try {
-        import org.json4s._
-        val root = org.json4s.jackson.JsonMethods.parse(new java.io.File(committedPath))
-        def num(v: JValue): Option[Double] = v match {
-          case JDouble(d)  => Some(d)
-          case JDecimal(d) => Some(d.toDouble)
-          case JInt(i)     => Some(i.toDouble)
-          case JLong(l)    => Some(l.toDouble)
-          case _           => None
-        }
-        def strs(v: JValue): Set[String] = v match {
-          case JArray(xs) => xs.collect { case JString(s) => s }.toSet
-          case _          => Set.empty
-        }
-        root \ "sf" match {
-          case JString(committedSf) if committedSf == sfDir =>
-            val cMedian = num(root \ "probe" \ "median")
-            val cStarted = root \ "started_utc" match {
-              case JString(s) => s
-              case _          => "unknown"
-            }
-            // the committed side's failed/flaky entries are excluded
-            // symmetrically with the current run's: a fast-crash
-            // duration must not serve as a drift reference either
-            val cBroken = strs(root \ "failed") ++ strs(root \ "flaky")
-            val cBest = root \ "queries" match {
-              case JObject(fields) => fields.flatMap { case (n, q) =>
-                if (cBroken(n)) None
-                else num(q \ "best_sec").filter(_ > 0).map(n -> _)
-              }.toMap
-              case _ => Map.empty[String, Double]
-            }
-            val valid = cMedian.filter(_ > 0)
-            // an explicitly configured reference that parses and
-            // matches the corpus but lacks a usable probe.median must
-            // not render the same null as "check disabled" with no
-            // hint — same policy as the missing-file/different-corpus
-            // messages above
-            if (valid.isEmpty && committedPathExplicit)
-              System.err.println(s"[bench] $committedPath has no positive probe.median - " +
-                "drift_vs_committed skipped (unusable reference, not disabled)")
-            valid.map(m => (cBest, m, cStarted))
-          case _ =>
-            // a committed artifact for a DIFFERENT corpus is not a
-            // reference — q01 at sf0.001 vs sf0.1 would read as pure
-            // drift (this is the BenchSmokeSpec/local-iteration case).
-            // Warn only for an EXPLICITLY configured path, matching the
-            // missing-file policy above: every gate/smoke run launched
-            // from the repo root hits the default committed artifact
-            // (sf0.1) with a small corpus, and a warning that fires on
-            // every routine run is noise, not signal
-            if (committedPathExplicit)
-              System.err.println(s"[bench] $committedPath records a different corpus than $sfDir - drift_vs_committed skipped")
-            None
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] cannot parse $committedPath for drift_vs_committed: ${e.getMessage}")
-        None
-      }
-    // failed/flaky excluded: their bestSec can be a failure duration,
-    // and "crash-fast vs committed-correct" is not drift.
-    // runMedian is SNAPSHOTTED here (a val, not the live probeStats):
-    // the repair pass below adds its own probes to the pool, and the
-    // flagging ratios must stay the ratios that triggered the repair —
-    // the artifact records this snapshot as `run_probe_median` so the
-    // drift arithmetic is reproducible from the file alone.
-    val runMedian = probeStats._2
-    val driftByName: Map[String, Double] = committedRef match {
-      case Some((cBest, cMedian, _)) if runMedian > 0 =>
-        repairEligible.flatMap { r =>
-          cBest.get(r.name).map(c => r.name -> (r.bestSec / runMedian) / (c / cMedian))
-        }.toMap
-      case _ => Map.empty
-    }
-    // "didn't check" must be identifiable: a reference that parses and
-    // matches the corpus but shares no healthy query with this run
-    // (e.g. SPARK_GRAFT_ONLY selecting a query the committed file lists
-    // failed) renders the same null as a disabled check — say so
-    if (committedRef.isDefined && driftByName.isEmpty)
-      System.err.println(s"[bench] $committedPath parsed and matches the corpus but holds " +
-        "no healthy queries overlapping this run - drift_vs_committed is null (no-overlap, not disabled)")
-    // same 2x threshold as the within-run consistency gate, same
-    // rationale: quiet-machine run-to-run spread on sub-2s queries
-    // reaches ~1.6x, and the real incidents read 2.4x (q40) and 3.75x
-    // (r8 q22)
-    val driftOutliers = driftByName.filter { case (_, d) => d >= 2.0 || d <= 0.5 }
-      .toSeq.sortBy { case (_, d) => -math.max(d, 1.0 / d) }
-    // DRIFT SELF-REPAIR (r12 verdict task 1): a >=2x drift outlier means
-    // the committed artifact holds a quieter same-corpus observation
-    // than any batch THIS run holds — the r12 driver window recorded q17
-    // at 9.68 s against 1.01 s committed same-code with quiet adjacent
-    // probes (IO/page-cache, invisible to the CPU probe), and the check
-    // could flag but not repair: a single-batch query had no second
-    // same-JVM observation. Give exactly those queries one: ONE
-    // re-measure batch (same best-of-N width as the main pass), bounded
-    // to the worst SPARK_GRAFT_DRIFT_REPAIR_MAX (default 5) outliers so
-    // a genuinely slower build cannot double its own wall clock chasing
-    // ratios a re-measure cannot fix. Only the SLOW direction (>=2x)
-    // repairs: contention/IO only ever inflate a timing, so a <=0.5x
-    // "outlier" is the committed side's window, and min-over-
-    // observations would keep the fast current number anyway.
-    // Eligibility uses the best observation the run ALREADY holds (main
-    // best or the scaling pass's full point): a heavy-six query whose
-    // scaling point is in family is already repaired, and re-measuring
-    // it would spend the bounded budget on a closed case. The raw
-    // best_sec and the flagging drift ratio stay untouched; the
-    // re-measured best feeds best_known_sec/total_best_known exactly
-    // like a scaling full point, and each repair is listed in the drift
-    // block's `repairs` array with its post-repair ratio, so the
-    // artifact shows both what the window recorded and what the machine
-    // re-measured.
-    val repairMax = cfgInt("SPARK_GRAFT_DRIFT_REPAIR_MAX", 5, min = 0)
-    def bestSoFar(r: QueryTiming): Double =
-      secondObservation.get(r.name).map(math.min(r.bestSec, _)).getOrElse(r.bestSec)
-    val repairTargets: Seq[(QueryTiming, Double)] = committedRef match {
-      case Some((cBest, cMedian, _)) if runMedian > 0 =>
-        repairEligible.flatMap { r =>
-          cBest.get(r.name).map(c => (r, (bestSoFar(r) / runMedian) / (c / cMedian)))
-        }.filter(_._2 >= 2.0).sortBy(-_._2).take(repairMax)
-      case _ => Seq.empty
-    }
-    // (name, pre-repair drift ratio, re-measured best of the repair
-    // batch). The pre-repair ratio is the ELIGIBILITY ratio — computed
-    // over the best observation the run already held (bestSoFar), not
-    // over the raw best_sec the outliers map uses — so for a heavy-six
-    // query whose scaling full point was quieter than its main batch,
-    // repairs[].drift can read BELOW that query's outliers value. Both
-    // are ≥2x by construction; the outliers map answers "what did the
-    // window record", repairs[].drift answers "what was still
-    // unexplained when the repair pass started".
-    val driftRepairs: Seq[(String, Double, Double)] = repairTargets.flatMap { case (r, d) =>
-      SparkEntry.queries.get(r.name).flatMap { fn =>
-        System.err.println(f"[bench] ${r.name} drift $d%.2fx vs committed quiet artifact - " +
-          "re-measuring batch once (drift self-repair)")
-        val n = if (heavy(r.name)) bestOf.max(3) else bestOf
-        val runs = (1 to n).flatMap { _ =>
-          val t = try {
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] drift re-measure of ${r.name} failed: ${e.getMessage}")
-            None
-          }
-          releaseLeftovers()
-          t
-        }
-        probeOnce() // untimed settle, as everywhere
-        probesSeen += probeOnce()
-        // an all-failed repair batch records nothing: the query already
-        // succeeded in the main pass, so a transient failure here must
-        // not shadow that — the flagged ratio simply stands unrepaired
-        runs.minOption.map(t => (r.name, d, t))
-      }
-    }
-    // SELF-REPAIR bookkeeping, now over EVERY same-corpus observation
-    // this run holds: the main best-of batch (incl. contention
-    // retries), the scaling pass's full point, and the drift-repair
-    // batch. Contention only inflates, so min stays the monotone
-    // estimator the retry gate relies on.
-    val repairBest: Map[String, Double] = driftRepairs.map { case (n, _, t) => n -> t }.toMap
-    val bestKnown: Map[String, Double] = repairEligible.flatMap { r =>
-      val seconds = secondObservation.get(r.name).toSeq ++ repairBest.get(r.name)
-      if (seconds.isEmpty) None else Some(r.name -> (r.bestSec +: seconds).min)
-    }.toMap
-    val totalBestKnown = results.map(r => bestKnown.getOrElse(r.name, r.bestSec)).sum
-    // HEADLINE = BEST-KNOWN (r16 verdict task 1): the official round
-    // record's `value` and per-query `queries` map carry each query at
-    // its best-known number — min over the main best, the scaling
-    // pass's full point, and any drift-repair batch — so one contended
-    // window can no longer put a number in the headline that the same
-    // artifact's own repairs re-measured to a third of it (r16 shipped
-    // q17 at 3.12 s in `queries` beside a 0.668 s repair, and its
-    // 60.9 s total read as a 5% regression on a flat round). The raw
-    // main-pass sum stays one field away as `value_raw`, and the full
-    // artifact keeps every raw observation (best_sec, runs, probes)
-    // untouched — this changes which number is HEADLINE, not what is
-    // recorded. Failed/flaky queries still enter at their raw bestSec
-    // (a failure duration; bestKnown never covers them), so a broken
-    // run can never read faster than a working one.
-    def headlineSec(r: QueryTiming): Double = bestKnown.getOrElse(r.name, r.bestSec)
-    val driftJson =
-      if (driftByName.isEmpty) "null"
-      else {
-        val ds = driftByName.values.toSeq.sorted
-        val med =
-          if (ds.size % 2 == 1) ds(ds.size / 2)
-          else (ds(ds.size / 2 - 1) + ds(ds.size / 2)) / 2.0
-        val outliersJson = driftOutliers
-          .map { case (n, d) => s""""$n":${f3(d)}""" }.mkString("{", ",", "}")
-        val repairsJson = driftRepairs.map { case (n, d, t) =>
-          val bk = bestKnown.getOrElse(n, t)
-          // post-repair ratio under the SAME snapshot arithmetic as the
-          // flagging ratio, so the pair is comparable within the file
-          val after = committedRef.flatMap { case (cBest, cMedian, _) =>
-            cBest.get(n).map(c => (bk / runMedian) / (c / cMedian))
-          }.getOrElse(d)
-          s"""{"query":"$n","drift":${f3(d)},"remeasured_sec":$t,"best_known_sec":$bk,"drift_after":${f3(after)}}"""
-        }.mkString("[", ",", "]")
-        // started_utc identifies WHICH recording the ratios reference —
-        // the path alone goes stale the moment a re-record overwrites it
-        val cStarted = committedRef.map(_._3).getOrElse("unknown")
-        s"""{"note":"per-query (best_sec / run_probe_median) / (committed best_sec / committed probe median) - run-wide medians on both sides, so host speed cancels but per-query probe noise does not enter; the one cross-check a single-batch query gets against probe-invisible slow windows (IO/page cache); flagging ratios never fold into value (different JVM and code revision), but each >=2x outlier gets ONE re-measure batch (worst SPARK_GRAFT_DRIFT_REPAIR_MAX, default 5, repair_max here; 0 disables the pass) whose best feeds best_known_sec/total_best_known like any same-corpus observation - see repairs[]. repairs[].drift is the pre-repair ratio over the best observation the run already held (main best or scaling full point), so it can read below the same query's outliers value, which always uses the raw main best_sec. outliers = ratio >= 2x or <= 0.5x, the consistency-gate threshold","committed":"${jstr(committedPath)}","committed_started_utc":"${jstr(cStarted)}","run_probe_median":$runMedian,"repair_max":$repairMax,"median":${f3(med)},"outliers":$outliersJson,"repairs":$repairsJson}"""
-      }
     val qsFull = results.map { r =>
       val retryPart =
         if (r.probeAfterRetrySec.isEmpty) ""
         else ",\"runs_retry\":" + r.retryRuns.mkString("[", ",", "]") +
-          r.retrySettleSec.map(",\"probe_settle_retry_sec\":" + _).getOrElse("") +
           ",\"probe_after_retry_sec\":" + r.probeAfterRetrySec.get
-      val bestKnownPart =
-        bestKnown.get(r.name).map(",\"best_known_sec\":" + _).getOrElse("")
-      val driftPart =
-        driftByName.get(r.name).map(d => ",\"drift_vs_committed\":" + f3(d)).getOrElse("")
-      "\"" + r.name + "\":{\"best_sec\":" + r.bestSec + bestKnownPart + ",\"runs\":" +
+      "\"" + r.name + "\":{\"best_sec\":" + r.bestSec + ",\"runs\":" +
         r.runs.mkString("[", ",", "]") + ",\"probe_before_sec\":" + r.probeBeforeSec +
-        ",\"probe_settle_sec\":" + r.settleProbeSec +
         ",\"probe_after_sec\":" + r.probeAfterSec +
-        ",\"probe_adjacent_sec\":" + r.probeAdjacentSec + driftPart + retryPart + "}"
+        ",\"probe_adjacent_sec\":" + r.probeAdjacentSec + retryPart + "}"
     }.mkString("{", ",", "}")
-    // PROBE NORMALIZATION, in-band (r10 verdict task): judges were
-    // hand-dividing totals by probe medians to compare artifacts across
-    // hosts/windows — the artifact now does it per query, against the
-    // LOCAL probe level (probe_adjacent_sec = median of the probes
-    // bracketing that query's runs), so a query measured in a hot
-    // window is normalized by the hot probes that bracketed it, not by
-    // a run-wide median the quiet majority dilutes. The sum is
-    // ADVISORY and unitless (seconds of query work per second of
-    // constant probe work): comparable across artifacts because the
-    // probe is the same fixed work item everywhere; never a wall-clock
-    // substitute for `value`/`total_best_known`. Failed/flaky queries
-    // are EXCLUDED (their bestSec is the max failure duration — folding
-    // it in would silently shift the cross-host metric by crash times),
-    // unlike the headline `value`, which keeps them so a broken run
-    // can never read faster than a working one.
-    val totalProbeNormalized = repairEligible.map(r => r.bestSec / r.probeAdjacentSec).sum
-    // full probe SERIES (order of observation): lets a judge see the
-    // contention timeline of the whole run, not just min/median/max
+    // advisory and unitless (seconds of query work per second of
+    // constant probe work), comparable across hosts and windows.
+    // Failed/flaky queries are EXCLUDED (their bestSec is a failure
+    // duration), unlike `value`, which keeps them so a broken run can
+    // never read faster than a working one.
+    val totalProbeNormalized =
+      results.filterNot(r => unreliable(r.name)).map(r => r.bestSec / r.probeAdjacentSec).sum
     val probeSeries = probesSeen.map(f3).mkString("[", ",", "]")
     val probeFull =
-      s"""{"work":"range(20e6)->hash->sum, constant","retry_gate":"probe_after > 2x running median -> re-measure once (main pass per query, scaling pass per point); every gate probe is preceded by an untimed settle probe (recorded per query as probe_settle_sec, excluded from the pool/series) that absorbs the bench's own one-shot post-release wake - measured 0.28-0.29 s on the first post-release probe after iterative queries, quiet from the second, which is what the q23-adjacent series spikes in pre-r11 artifacts were","normalization":"per-query probe_adjacent_sec = median of the probes bracketing that query's runs; total_probe_normalized = sum(best_sec / probe_adjacent_sec) over non-failed, non-flaky queries (a failure duration must not shift the cross-host metric), unitless, comparable across hosts - advisory, not a wall-clock total","start_sec":$probeStart,"min":${probeStats._1},"median":${probeStats._2},"max":${probeStats._3},"series":$probeSeries}"""
+      s"""{"work":"range(20e6)->hash->sum, constant","retry_gate":"probe_after > 2x running median -> re-measure once (main pass per query, scaling and sf1 passes per point)","normalization":"per-query probe_adjacent_sec = median of the probes bracketing that query's runs; total_probe_normalized = sum(best_sec / probe_adjacent_sec) over non-failed, non-flaky queries, unitless, comparable across hosts - advisory, not a wall-clock total","start_sec":$probeStart,"min":${probeStats._1},"median":${probeStats._2},"max":${probeStats._3},"series":$probeSeries}"""
     def q22PairsJson(quarterSec: Double, halfSec: Double, fullSec: Double): String = {
-      // sec_per_million_candidates sits beside growth_exponents so the
-      // wall-time exponent can never be misread as kernel
-      // superlinearity: on the duplicate-heavy corpus candidate pairs
-      // grow ~4x for 2x rows (densifying buckets, fixed vocabulary), so
-      // wall time per CANDIDATE is the kernel-attributable number — it
+      // wall time per CANDIDATE is the kernel-attributable number: it
       // should hold or fall across scale points even while the raw
-      // exponent reads >1
+      // exponent reads >1 on the densifying corpus
       def perM(sec: Double, frac: Double): String =
         q22Pairs.get(frac).filter(_ > 0).map(p => f3(sec * 1e6 / p)).getOrElse("null")
       val pairs =
@@ -1315,116 +590,61 @@ object Bench {
         else s""","candidate_pairs":{"quarter":${q22Pairs.getOrElse(0.25, -1L)},"half":${q22Pairs.getOrElse(0.5, -1L)},"full":${q22Pairs.getOrElse(1.0, -1L)}},"sec_per_million_candidates":{"quarter":${perM(quarterSec, 0.25)},"half":${perM(halfSec, 0.5)},"full":${perM(fullSec, 1.0)}}"""
       val demo =
         if (capDemo.isEmpty) ""
-        else "," + "\"cap_demo\":" + capDemo.map { case (cap, p, d) =>
+        else ",\"cap_demo\":" + capDemo.map { case (cap, p, d) =>
           s"""{"max_bucket_size":$cap,"candidate_pairs":$p,"dropped_bucket_rows":$d}"""
         }.mkString("[", ",", "]")
-      pairs + demo + lcsDemo
+      pairs + demo
     }
-    def clusterDemoJson: String =
-      if (clusterDemoChain.isEmpty && clusterDemoFallback.isEmpty) ""
-      else "," + "\"cluster_demo\":{\"chain\":" +
-        clusterDemoChain.mkString("[", ",", "]") +
-        ",\"fallback\":" + clusterDemoFallback.mkString("[", ",", "]") +
-        ",\"corpus\":" + clusterDemoCorpus.mkString("[", ",", "]") + "}"
     val scalingFull =
       if (scaling.isEmpty) "null"
       else scaling.map { case (n, q, h, f) =>
-        val extra =
-          if (n == "q22_person_match_self") q22PairsJson(q, h, f)
-          else if (n == "q23_person_clustering") clusterDemoJson
-          else ""
+        val extra = if (n == "q22_person_match_self") q22PairsJson(q, h, f) else ""
         s""""$n":{"quarter_sec":$q,"half_sec":$h,"full_sec":$f,"growth_exponents":[${exp(q, h)},${exp(h, f)}]$extra}"""
       }.mkString("{", ",",
         s""","retries":${strArr(scalingRetries)},"note":"$note"}""")
-    val consistencyJson =
-      if (scaling.isEmpty) "null"
-      else consistency.map { case (n, b, f) =>
-        // best_known_sec from the SAME post-repair map queries[] uses:
-        // a drift re-measure can land below min(main, scaling full),
-        // and one artifact must never report two different "best known"
-        // values for one query under the same field name
-        val bk = bestKnown.getOrElse(n, math.min(b, f))
-        s"""{"query":"$n","main_best_sec":$b,"scaling_full_sec":$f,"ratio":${math.max(f / b, b / f)},"best_known_sec":$bk}"""
-      }.mkString("[", ",", "]")
     val endedMs = System.currentTimeMillis()
     val wallJson =
       s""""started_utc":"${java.time.Instant.ofEpochMilli(startedMs)}","ended_utc":"${java.time.Instant.ofEpochMilli(endedMs)}","wall_sec":${(endedMs - startedMs) / 1000.0}"""
-    // value_def is the schema marker for the r17 headline redefinition:
-    // `value` switched meaning from the raw main-pass sum to best-known
-    // (min across main pass, scaling full point, drift repairs;
-    // failed/flaky excluded). Artifacts WITHOUT this field predate the
-    // switch and their `value` is the raw sum — cross-round tooling must
-    // key on the field, not assume one meaning
+    // value_def marks what `value` sums: "main_best" is the plain sum of
+    // the main-pass bests. Earlier artifacts carry "best_known" (a min
+    // across passes and re-measures) or no marker (the plain sum), so
+    // cross-artifact tooling must key on this field
     val fullJson =
-      s"""{"metric":"total","value":$totalBestKnown,"value_def":"best_known","value_raw":$total,"total_best_known":$totalBestKnown,"total_probe_normalized":${f3(totalProbeNormalized)},"unit":"sec",$wallJson,"best_of":$bestOf,"queries":$qsFull,"failed":$failedJson,"flaky":$flakyJson,"contention_retries":$contendedJson,"consistency":$consistencyJson,"drift_vs_committed":$driftJson,"warmup":$warmupJson,"probe":$probeFull,"caps":$caps,"scaling":$scalingFull,"scaling_sf1":$sf1Json,"sf":"${jstr(sfDir)}"}"""
+      s"""{"metric":"total","value":$total,"value_def":"main_best","total_probe_normalized":${f3(totalProbeNormalized)},"unit":"sec",$wallJson,"best_of":$bestOf,"queries":$qsFull,"failed":${strArr(failed)},"flaky":${strArr(flaky)},"contention_retries":${strArr(contended)},"warmup":$warmupJson,"probe":$probeFull,"caps":$caps,"scaling":$scalingFull,"scaling_sf1":$sf1Json,"sf":"${jstr(sfDir)}"}"""
 
-    // ---- compact summary sized for the driver's ~2000-char tail ----
-    // per-query keys are the qNN prefix (like growth_exponents): full
-    // names cost ~700 chars across 49 queries, and r13's +19-char
-    // drift_repaired field pushed the full-name line to 1903 — past the
-    // 1900 fallback, which silently drops the whole per-query map from
-    // the captured tail. Short keys buy ~700 chars of headroom; the
-    // full artifact keeps full names. Guarded: if two selected queries
-    // ever shared a prefix the short map would silently lose one, so
-    // fall back to full names (the fallback line still carries totals).
+    // ---- compact summary sized for a ~2000-char tail capture ----
+    // per-query keys (and the failed/flaky names, which share their
+    // namespace) are the qNN prefix: full names cost ~700 chars across
+    // the registry. If two selected queries ever shared a prefix the
+    // short map would silently lose one, so fall back to full names.
     val prefixesUnique =
       results.map(_.name.takeWhile(_ != '_')).distinct.size == results.size
     def qKey(name: String) = if (prefixesUnique) name.takeWhile(_ != '_') else name
-    // best-known per query, same policy as the headline `value` (see
-    // headlineSec above); raw per-query numbers live in the full
-    // artifact's queries[].best_sec/runs
     val qsCompact = results.map { r =>
-      "\"" + qKey(r.name) + "\":" + f3(headlineSec(r))
+      "\"" + qKey(r.name) + "\":" + f3(r.bestSec)
     }.mkString("{", ",", "}")
-    // failed/flaky share the queries map's key namespace (a tail
-    // consumer cross-references them against it) and its budget
-    // rationale: full failure names are up to ~25 chars each and erode
-    // the exact headroom the prefix keys bought. Full names stay in the
-    // full artifact's arrays.
-    val failedCompact = strArr(failed.map(qKey))
-    val flakyCompact = strArr(flaky.map(qKey))
-    // null, not 0, when the cross-check never ran (no committed
-    // reference / different corpus): "didn't check" must stay
-    // distinguishable from "checked, clean" in the compact line too
-    val driftOutliersCompact = if (driftByName.isEmpty) "null" else driftOutliers.size.toString
-    // repaired COUNT mirrors the outlier count's null discipline — and
-    // extends it: REPAIR_MAX=0 disables the repair pass entirely, so 0
-    // would be indistinguishable from "pass ran, every outlier already
-    // had an in-family observation"; a disabled pass reads null like an
-    // absent reference does. The per-repair detail (ratios, re-measured
-    // seconds) lives in the full artifact's repairs[] — names would
-    // blow the tail budget
-    val driftRepairedCompact =
-      if (driftByName.isEmpty || repairMax == 0) "null" else driftRepairs.size.toString
     val scalingCompact =
       if (scaling.isEmpty) "null"
       else scaling.map { case (n, q, h, f) =>
-        // same collision guard as the queries map: duplicate JSON keys
-        // would silently drop one query's exponents
         "\"" + qKey(n) + "\":[" + f3(exp(q, h)) + "," + f3(exp(h, f)) + "]"
       }.mkString("{", ",", "}")
-    val probeCompact =
-      s"""{"min":${f3(probeStats._1)},"med":${f3(probeStats._2)},"max":${f3(probeStats._3)}}"""
-    // didn't-check vs checked-clean, same discipline as the drift
-    // counters: when the scaling pass never ran, the consistency
-    // cross-check and the scaling retry gate never executed — 0 would
-    // read as "checked, clean" (the full artifact nulls consistency
-    // for the same reason)
-    val consistencyCompact = if (scaling.isEmpty) "null" else consistency.size.toString
+    // null, not 0, when the scaling pass never ran: "didn't check" must
+    // not read as "checked, clean"
     val retriedScalingCompact = if (scaling.isEmpty) "null" else scalingRetries.size.toString
-    // retried COUNT only: a heavily contended run can flag a dozen
-    // queries, and their names would blow the tail budget and cost the
-    // whole per-query map — the names live in the full JSON. "tpn" is
-    // the full artifact's total_probe_normalized under a short key (the
-    // compact line lives inside a ~2000-char tail capture; README
-    // "Reproducing the bench" documents the abbreviation).
+    // retried COUNT only: a contended run can flag a dozen queries, and
+    // their names would blow the tail budget
+    val head =
+      s""""metric":"total","value":${f3(total)},"value_def":"main_best","tpn":${f3(totalProbeNormalized)},"unit":"sec","best_of":$bestOf"""
+    val tail =
+      s""""failed":${strArr(failed.map(qKey))},"flaky":${strArr(flaky.map(qKey))},"retried":${contended.size},"retried_scaling":$retriedScalingCompact,"probe":{"min":${f3(probeStats._1)},"med":${f3(probeStats._2)},"max":${f3(probeStats._3)}}"""
+    val pointer = s""""full":"${jstr(fullPath)}","sf":"${jstr(sfDir)}""""
     val compact =
-      s"""{"metric":"total","value":${f3(totalBestKnown)},"value_def":"best_known","value_raw":${f3(total)},"total_best_known":${f3(totalBestKnown)},"tpn":${f3(totalProbeNormalized)},"unit":"sec","best_of":$bestOf,"queries":$qsCompact,"failed":$failedCompact,"flaky":$flakyCompact,"retried":${contended.size},"retried_scaling":$retriedScalingCompact,"consistency_warnings":$consistencyCompact,"drift_outliers":$driftOutliersCompact,"drift_repaired":$driftRepairedCompact,"probe":$probeCompact,"growth_exponents":$scalingCompact,"full":"${jstr(fullPath)}","sf":"${jstr(sfDir)}"}"""
+      s"""{$head,"queries":$qsCompact,$tail,"growth_exponents":$scalingCompact,$pointer}"""
     val compactSafe =
       if (compact.length <= 1900) compact
       else {
         System.err.println(s"[bench] compact line ${compact.length} chars > 1900; emitting reduced line")
-        s"""{"metric":"total","value":${f3(totalBestKnown)},"value_def":"best_known","value_raw":${f3(total)},"total_best_known":${f3(totalBestKnown)},"tpn":${f3(totalProbeNormalized)},"unit":"sec","best_of":$bestOf,"failed":$failedCompact,"flaky":$flakyCompact,"retried":${contended.size},"retried_scaling":$retriedScalingCompact,"consistency_warnings":$consistencyCompact,"drift_outliers":$driftOutliersCompact,"drift_repaired":$driftRepairedCompact,"probe":$probeCompact,"full":"${jstr(fullPath)}","sf":"${jstr(sfDir)}"}"""
+        s"""{$head,$tail,$pointer}"""
       }
     // write the full artifact here (not in main) so every caller —
     // including BenchSmokeSpec — gets the file a path parameter implies

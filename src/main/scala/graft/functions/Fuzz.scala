@@ -65,24 +65,10 @@ object Fuzz {
     * quadratic DP, so a long-document pair is never a per-row time bomb.
     * All branches compute the exact same LCS length.
     */
-  /** Demo/A-B-only kernel override: `true` routes every [[lcsLength]]
-    * call through the retained two-row DP reference ([[lcsLengthDp]])
-    * instead of the bit-parallel branches, so the bench's `lcs_demo`
-    * can record an old-vs-new A/B THROUGH the registered UDFs — the
-    * exact production call path with only the kernel swapped. @volatile
-    * for cross-thread visibility to local-mode executor threads (the
-    * bench topology is one JVM; the write happens-before the job that
-    * reads it). Hot-path cost is a single volatile LOAD per call — a
-    * plain load on x86, negligible next to the kernel itself.
-    * Production code never sets it; the bench resets it in a finally.
-    */
-  @volatile private[graft] var useDpKernelForDemo: Boolean = false
-
   def lcsLength(a: CharSequence, b: CharSequence): Int = {
     val (s, t) = if (a.length <= b.length) (a, b) else (b, a)
     val n = s.length
     if (n == 0) 0
-    else if (useDpKernelForDemo) lcsLengthDp(s, t)
     else if (n <= 64) lcsLengthBitParallel(s, t)
     else lcsLengthMultiWord(s, t)
   }

@@ -295,18 +295,19 @@ object Clustering {
     labels
   }
 
-  /** Bench attribution only (the full artifact's `cluster_demo`): round
-    * count and convergence of the LAST connected-components call on this
-    * JVM, either algorithm. Written by [[connectedComponents]] and
-    * [[connectedComponentsStar]]; never read by engine logic.
+  /** Round count and convergence of the LAST connected-components call
+    * on this JVM, either algorithm. Written by [[connectedComponents]] and
+    * [[connectedComponentsStar]]; never read by engine logic. Read by
+    * perfbench's `Observed` adapter (`linkage.cc_rounds`) and
+    * ClusteringSpec.
     */
   @volatile private[graft] var lastCcRounds: Int = -1
   @volatile private[graft] var lastCcConverged: Boolean = true
 
-  /** Bench attribution only (`cluster_demo` fallback evidence): the
-    * oversized-components accumulator of the LAST [[cluster]] call on
-    * this JVM — its `.value` is meaningful once an action has run the
-    * returned frame. Never read by engine logic.
+  /** The oversized-components accumulator of the LAST [[cluster]] call
+    * on this JVM — its `.value` is meaningful once an action has run the
+    * returned frame. Never read by engine logic. Read by perfbench's
+    * `Observed` adapter (`linkage.oversized`).
     */
   @volatile private[graft] var lastOversizedAccumulator:
     org.apache.spark.util.LongAccumulator = _
@@ -344,8 +345,8 @@ object Clustering {
     * maxIter is loud, same policy as the label loop. Bound honesty:
     * Kiveris et al. PROVE O(log^2 n) rounds for this alternation; the
     * O(log n) figure above is the observed/typical count (their
-    * experiments and ours — the 4096-vertex diameter-4095 chain in
-    * `cluster_demo` converges in 13 rounds ≈ log2 4096 + 1). Default
+    * experiments and ours — a 4096-vertex diameter-4095 chain
+    * converged in 13 rounds ≈ log2 4096 + 1). Default
     * maxIter 35 covers the observed log-rounds for any graph up to
     * 2^35 vertices with headroom, but since the proven bound is
     * log^2, tripping it on an adversarial input is conceivable —

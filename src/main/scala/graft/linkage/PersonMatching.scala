@@ -211,7 +211,7 @@ object PersonMatching {
       // per-bucket membership ceiling; ≤0 disables (see capBuckets)
       maxBucketSize: Int = 10000,
       // score via the codegen'd column expression instead of the UDF —
-      // see the measurement note in scorePairs
+      // see the measurement note in the private `score`
       useExpressionScorer: Boolean = false,
       // src and trg are the SAME dataset: score each unordered pair once
       // (srcID <= trgID) and mirror — valid because every default kernel
@@ -219,11 +219,9 @@ object PersonMatching {
       // the asymmetric simple-date matcher
       selfJoinMirror: Boolean = false)
 
-  /** E6 `person_similarity` as a pure column expression over the native
-    * codegen'd kernels — identical arithmetic (and FP association) to
-    * `Similarity.personSimilarity`, but no per-pair Row conversion,
-    * boxing or UDF dispatch. This is the hot path of the blocked join:
-    * millions of candidate pairs score inside one codegen'd projection.
+  /** The reference's `__not_empty` gate as a column: non-null, non-empty
+    * and not one of the missing-value sentinels, for the column scorer
+    * below.
     */
   private[graft] def notEmptyCol(c: Column): Column =
     c.isNotNull && length(c) > 0 && !c.isin("00000000", "-1.0", "-1")
@@ -246,6 +244,13 @@ object PersonMatching {
     when(notEmptyCol(a) && notEmptyCol(b),
       graft.expressions.FuzzColumns.tokenSetRatio(a, b)).otherwise(lit(-1.0))
 
+  /** E6 `person_similarity` as a pure column expression over the native
+    * codegen'd kernels — identical arithmetic (and FP association) to
+    * `Similarity.personSimilarity`, but no per-pair Row conversion,
+    * boxing or UDF dispatch. The blocked join runs it only under
+    * `useExpressionScorer`; its default scorer is the UDF (see the
+    * measurement note in `score`).
+    */
   private[graft] def personSimilarityColumn(
       s: PersonCols, t: PersonCols,
       useDate: Boolean, usePrisoner: Boolean, usePob: Boolean,

@@ -103,6 +103,9 @@ object Regexes {
     val sb = new java.lang.StringBuilder(p.length + 16)
     var i = 0
     var inClass = false
+    // index of the open class's first body char (after `[` or `[^`): a
+    // `]` there is a literal member, not the close, in Java and python
+    var bodyStart = -1
     while (i < p.length) {
       val c = p.charAt(i)
       if (c == '\\' && i + 1 < p.length) {
@@ -120,15 +123,16 @@ object Regexes {
         }
         i += 2
       } else {
-        // fail-fast on class NESTING (Java '[a[b]]' unions) and on the
-        // '[]...]' literal-bracket form: the flat tracker below would
-        // flip inClass at the wrong place and silently mistranslate a
-        // later \s/\w/\b (r20 ADVICE item — latent only, every current
-        // pattern is flat; same policy as the \W/\B rejections above)
+        // fail-fast on class NESTING (Java '[a[b]]' unions): the flat
+        // tracker below would flip inClass at the wrong place and
+        // silently mistranslate a later \s/\w/\b (same policy as the
+        // \W/\B rejections above)
         require(!(c == '[' && inClass),
           s"nested character class unsupported by pyS translate(): $p")
-        if (c == '[' && !inClass) inClass = true
-        else if (c == ']' && inClass) inClass = false
+        if (c == '[' && !inClass) {
+          inClass = true
+          bodyStart = if (i + 1 < p.length && p.charAt(i + 1) == '^') i + 2 else i + 1
+        } else if (c == ']' && inClass && i != bodyStart) inClass = false
         sb.append(c)
         i += 1
       }

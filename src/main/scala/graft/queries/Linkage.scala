@@ -71,9 +71,7 @@ object Linkage {
     * keeps every word bucketable at the clustering `idxChars = 4` (a
     * 3-char word produces no replay bucket and would orphan its twin).
     */
-  // private[graft]: Bench's cluster_demo re-runs the exact q23 corpus
-  // with ccAlgorithm varied (label-vs-star real-corpus A/B)
-  private[graft] def doubledCorpus(spark: SparkSession, dir: String): DataFrame = {
+  private def doubledCorpus(spark: SparkSession, dir: String): DataFrame = {
     val base = persons(spark, dir)
       .filter(length(col("strGName_processed")) >= 4 && length(col("strLName_processed")) >= 4)
       .dropDuplicates("strGName_processed", "strLName_processed", "strDoB_processed")
@@ -400,8 +398,11 @@ object Linkage {
     * asymmetry inside the secondary mean, and the two conditional folds —
     * ran only under the one production flag set. q54 scores each orders
     * row under SIX flag combinations at once through
-    * `PersonMatching.personSimilarityColumn` — the codegen'd Catalyst
-    * path the blocked join actually executes — as six parallel columns.
+    * `PersonMatching.personSimilarityColumn` as six parallel columns.
+    * That column expression is the opt-in `useExpressionScorer` path;
+    * the blocked join scores with a UDF over
+    * `Similarity.personSimilarity`, whose combiner arithmetic the
+    * expression repeats term for term.
     *
     * The fields are constructed so every KERNEL score is forced by
     * construction (equal strings → 100, empty/sentinel → filtered −1,

@@ -61,32 +61,22 @@ class BenchSmokeSpec extends SparkSpec {
       assert(res.full.contains("\"contention_retries\":"))
       assert("""\"retried\":\d+""".r.findFirstIn(res.compact).isDefined, res.compact)
 
-      // consistency self-repair + cold-start provenance: always present;
-      // with no consistency flags total_best_known must EQUAL value
-      val tbk = """"total_best_known":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.full)
-        .getOrElse(fail("no total_best_known in full artifact")).group(1).toDouble
+      // `value` is the plain main-pass sum — one query, so its best —
+      // and value_def names that definition: earlier artifacts' `value`
+      // was a best-known min across passes, and cross-artifact tooling
+      // keys on this field so the two are never mixed
       val tot = """"value":([0-9.E-]+)""".r.findFirstMatchIn(res.full)
         .getOrElse(fail("no value in full artifact")).group(1).toDouble
-      assert(math.abs(tbk - tot) < 1e-9, s"no flags fired but total_best_known $tbk != value $tot")
-      assert(res.compact.contains("\"total_best_known\":"))
-      // schema marker for the r17 headline redefinition: `value` means
-      // best-known exactly when value_def says so — artifacts without
-      // the field predate the switch and carry the raw main-pass sum.
-      // Cross-round tooling keys on this field; losing it would silently
-      // mix the two metric definitions again (the r17 advice item).
-      assert(res.full.contains(""""value_def":"best_known""""), res.full.take(200))
-      assert(res.compact.contains(""""value_def":"best_known""""), res.compact.take(200))
+      assert(math.abs(tot - b) < 1e-9, s"value $tot must be the main-pass best $b")
+      assert(res.full.contains(""""value_def":"main_best""""), res.full.take(200))
+      assert(res.compact.contains(""""value_def":"main_best""""), res.compact.take(200))
+      // SCALING=0: the scaling retry gate never ran, so its count reads
+      // null, never a "checked, clean" 0
+      assert("""\"retried_scaling\":null""".r.findFirstIn(res.compact).isDefined, res.compact)
       val warm = """"median_first_over_best":([0-9.]+)""".r
         .findFirstMatchIn(res.full)
         .getOrElse(fail("no warmup spread in full artifact")).group(1).toDouble
       assert(warm > 0, s"warmup median ratio must be positive: $warm")
-
-      // settle probe: recorded per query, positive (it runs real work)
-      val settle = """"probe_settle_sec":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.full)
-        .getOrElse(fail("no probe_settle_sec in full artifact")).group(1).toDouble
-      assert(settle > 0, s"probe_settle_sec must be positive: $settle")
 
       // probe normalization: every query carries its bracketing-probe
       // median, and both artifacts carry the advisory normalized total
@@ -114,15 +104,12 @@ class BenchSmokeSpec extends SparkSpec {
     // the division really is full_sec / candidate_pairs (per million),
     // i.e. the normalization can never silently drift from the two raw
     // fields it sits beside. Also covers the scaling pass end to end in
-    // the suite (previously only the driver's full run exercised it) and
-    // the r18 lcs_demo master-recording contract.
+    // the suite and the cap_demo pair at the default and a tight cap.
     withProps(
       "SPARK_GRAFT_ONLY" -> "q22",
       "SPARK_GRAFT_BEST_OF" -> "1",
       "SPARK_GRAFT_SCALING" -> "force",
-      "SPARK_GRAFT_DRIFT_REPAIR_MAX" -> "0",
-      "SPARK_GRAFT_LCS_DEMO_PAIRS" -> "8",
-      "SPARK_GRAFT_LCS_DEMO_CHARS" -> "200") {
+      "SPARK_GRAFT_CAP_DEMO_BUCKET" -> "2") {
       val res = Bench.run(spark, sf, "/tmp/graft_bench_smoke_scaling.json")
         .fold(err => fail(s"Bench.run refused: $err"), identity)
       assert(res.failed.isEmpty)
@@ -144,164 +131,44 @@ class BenchSmokeSpec extends SparkSpec {
       val got = nm.group(3).toDouble
       assert(math.abs(got - expected) < math.max(0.002, 0.01 * expected),
         s"full normalization $got != full_sec $fullSec * 1e6 / pairs $fullPairs = $expected")
-      // the lcs_demo A/B is only meaningful on a local master (the
-      // kernel switch is a driver-JVM volatile); the recorded master
-      // makes that precondition auditable in every artifact
-      val masterRe = """"lcs_demo":\{[^}]*"master":"local""".r
-      assert(masterRe.findFirstIn(res.full).isDefined,
-        s"lcs_demo must record the (local) master: ${res.full}")
+      // cap_demo: the default cap, then the tightened one, counted on the
+      // same full corpus — a tighter cap can only drop bucket
+      // memberships, so it never forms more candidate pairs
+      val capRe = """\{"max_bucket_size":(\d+),"candidate_pairs":(\d+),"dropped_bucket_rows":(\d+)\}""".r
+      val caps = capRe.findAllMatchIn(res.full).map(m =>
+        (m.group(1).toInt, m.group(2).toLong, m.group(3).toLong)).toList
+      val defaultCap = graft.linkage.PersonMatching.MatchConfig().maxBucketSize
+      assert(caps.map(_._1) === List(defaultCap, 2), s"cap_demo entries: ${res.full}")
+      val (defaultCounts, tightCounts) = (caps(0), caps(1))
+      assert(defaultCounts._2 === fullPairs,
+        s"cap_demo at the default cap must count the scaling pass's full point: $caps")
+      assert(tightCounts._2 <= defaultCounts._2, s"tight cap formed more candidates: $caps")
+      assert(caps.forall(_._3 >= 0), s"negative drop count: $caps")
     }
   }
 
-  test("Bench.run: drift_vs_committed flags same-corpus movement and gates on corpus identity") {
-    // hand-written "committed" artifact: q01's probe-normalized ratio is
-    // pinned microscopic (best 0.001 s at probe median 1.0), so any real
-    // measurement must read as a >=2x outlier — exercising the parse,
-    // the per-query ratio, the provenance stamp, and the outlier list.
-    // q99 is listed failed: a committed-side failure duration must be
-    // refused as a reference, not just a current-side one
-    def committed(sfField: String): String = {
-      val f = java.io.File.createTempFile("graft_committed_", ".json")
-      f.deleteOnExit()
-      val w = new java.io.PrintWriter(f, "UTF-8")
-      try w.println(s"""{"metric":"total","queries":{"q01_pricing_summary":{"best_sec":0.001},"q99_broken":{"best_sec":0.2}},"failed":["q99_broken"],"probe":{"median":1.0},"started_utc":"2026-01-02T03:04:05Z","sf":"$sfField"}""")
-      finally w.close()
-      f.getAbsolutePath
-    }
+  test("Bench.run: scaling_sf1 times q22/q61 on a replicated corpus and counts q61's candidates") {
     withProps(
-      "SPARK_GRAFT_ONLY" -> "q01",
+      "SPARK_GRAFT_ONLY" -> "q22,q61",
       "SPARK_GRAFT_BEST_OF" -> "1",
-      "SPARK_GRAFT_SCALING" -> "0",
-      "SPARK_GRAFT_BENCH_COMMITTED" -> committed(sf)) {
-      val res = Bench.run(spark, sf, "/tmp/graft_bench_smoke_drift.json")
+      "SPARK_GRAFT_SCALING" -> "force",
+      "SPARK_GRAFT_SCALING_SF1" -> "1",
+      "SPARK_GRAFT_SF1_FACTOR" -> "2") {
+      val res = Bench.run(spark, sf, "/tmp/graft_bench_smoke_sf1.json")
         .fold(err => fail(s"Bench.run refused: $err"), identity)
-      val b = """"q01_pricing_summary":\{"best_sec":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.full).getOrElse(fail("no best_sec")).group(1).toDouble
-      // the drift block's own recorded snapshot median — the repair
-      // pass adds probes AFTER the ratios are computed, so the probe
-      // block's final median is NOT the normalizer the ratios used
-      val med = """"run_probe_median":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.full).getOrElse(fail("no run_probe_median")).group(1).toDouble
-      val drift = """"drift_vs_committed":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.full).getOrElse(fail(s"no per-query drift in: ${res.full}"))
-        .group(1).toDouble
-      // committed ratio is 0.001/1.0; run-wide medians normalize, and
-      // 3-decimal artifact rounding is the only slack. Relative
-      // tolerance: drift here is in the thousands
-      assert(math.abs(drift - (b / med) / 0.001) < 0.01 * drift,
-        s"drift $drift inconsistent with best $b / run median $med over committed 0.001")
-      assert(drift >= 2.0, s"pinned-microscopic committed ratio must flag: $drift")
-      assert(res.full.contains(""""outliers":{"q01_pricing_summary":"""),
-        s"outlier list missing the flagged query: ${res.full}")
-      assert(res.full.contains(""""committed_started_utc":"2026-01-02T03:04:05Z""""),
-        s"drift block must stamp WHICH recording it referenced: ${res.full}")
-      assert("""\"drift_outliers\":1""".r.findFirstIn(res.compact).isDefined,
-        s"compact line must carry the outlier count: ${res.compact}")
-      // SELF-REPAIR contract (r13): the flagged query got one
-      // re-measure batch, listed in repairs[] with its pre-repair
-      // ratio (over the best observation the run already held — equal
-      // to the flagging ratio here, since no scaling pass ran), the
-      // re-measured seconds, and the post-repair ratio; its best
-      // feeds best_known_sec and total_best_known restates the
-      // headline with it (min can only improve or hold)
-      val rep = """"repairs":\[\{"query":"q01_pricing_summary","drift":([0-9.E-]+),"remeasured_sec":([0-9.E-]+),"best_known_sec":([0-9.E-]+),"drift_after":([0-9.E-]+)\}\]""".r
-        .findFirstMatchIn(res.full)
-        .getOrElse(fail(s"no repair entry for the flagged query: ${res.full}"))
-      val (remeasured, bk) = (rep.group(2).toDouble, rep.group(3).toDouble)
-      assert(remeasured > 0, "re-measured batch must record a positive time")
-      assert(math.abs(bk - math.min(b, remeasured)) < 1e-9,
-        s"best_known $bk must be min(best $b, remeasured $remeasured)")
-      assert(res.full.contains(""""best_known_sec":""" + bk),
-        s"repair must feed the query's best_known_sec: ${res.full}")
-      val tbk = """"total_best_known":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.full).getOrElse(fail("no total_best_known")).group(1).toDouble
-      assert(math.abs(tbk - bk) < 1e-9,
-        s"single-query run: total_best_known $tbk must equal the repaired best $bk")
-      assert("""\"drift_repaired\":1""".r.findFirstIn(res.compact).isDefined,
-        s"compact line must carry the repair count: ${res.compact}")
-      // HEADLINE = BEST-KNOWN (r17): the compact line's `value` and its
-      // per-query map must carry the REPAIRED number — the r16 record
-      // shipped a 3.12 s headline beside its own 0.668 s repair — with
-      // the raw main-pass sum one field away as `value_raw`. Tolerance
-      // 5e-4: the compact line rounds to 3 decimals.
-      val headlineV = """"value":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.compact).getOrElse(fail("no value in compact")).group(1).toDouble
-      assert(math.abs(headlineV - bk) < 5e-4,
-        s"compact headline value $headlineV must be the repaired best-known $bk")
-      val headlineRaw = """"value_raw":([0-9.E-]+)""".r
-        .findFirstMatchIn(res.compact).getOrElse(fail("no value_raw in compact")).group(1).toDouble
-      assert(math.abs(headlineRaw - b) < 5e-4,
-        s"compact value_raw $headlineRaw must be the raw main best $b")
-      val qMapV = """"queries":\{"q01":([0-9.E-]+)\}""".r
-        .findFirstMatchIn(res.compact).getOrElse(fail(s"no compact queries map: ${res.compact}"))
-        .group(1).toDouble
-      assert(math.abs(qMapV - bk) < 5e-4,
-        s"compact per-query map must carry best-known $bk, not raw $b (got $qMapV)")
-    }
-    // bounded: SPARK_GRAFT_DRIFT_REPAIR_MAX=0 disables the repair pass
-    // while the flagging stays — the advisory check must never be able
-    // to spend unbounded wall clock
-    withProps(
-      "SPARK_GRAFT_ONLY" -> "q01",
-      "SPARK_GRAFT_BEST_OF" -> "1",
-      "SPARK_GRAFT_SCALING" -> "0",
-      "SPARK_GRAFT_DRIFT_REPAIR_MAX" -> "0",
-      "SPARK_GRAFT_BENCH_COMMITTED" -> committed(sf)) {
-      val res = Bench.run(spark, sf, "/tmp/graft_bench_smoke_drift0.json")
-        .fold(err => fail(s"Bench.run refused: $err"), identity)
-      assert("""\"drift_outliers\":1""".r.findFirstIn(res.compact).isDefined, res.compact)
-      assert(res.full.contains(""""repairs":[]"""),
-        s"repair cap 0 must leave the repairs array empty: ${res.full}")
-      // the full artifact names the cap, so empty-because-disabled is
-      // identifiable there too
-      assert(res.full.contains(""""repair_max":0"""),
-        s"drift block must record the repair cap: ${res.full}")
-      // disabled pass reads null, not 0: 0 means "pass ran, every
-      // outlier already had an in-family observation", which a
-      // REPAIR_MAX=0 run cannot claim
-      assert("""\"drift_repaired\":null""".r.findFirstIn(res.compact).isDefined, res.compact)
-      // no repair, no scaling -> no second observation -> no best_known
-      // entry, and total_best_known falls back to value
-      assert(!res.full.contains(""""best_known_sec":"""),
-        s"no repair ran, so no best_known_sec may appear: ${res.full}")
-    }
-    // corpus-identity gate: a committed artifact recorded at a DIFFERENT
-    // sf is not a reference (q01 at sf0.001 vs sf0.1 would read as pure
-    // drift) — the whole block must be null, and the compact count null
-    // too ("didn't check" must never read as "checked, clean")
-    withProps(
-      "SPARK_GRAFT_ONLY" -> "q01",
-      "SPARK_GRAFT_BEST_OF" -> "1",
-      "SPARK_GRAFT_SCALING" -> "0",
-      "SPARK_GRAFT_BENCH_COMMITTED" -> committed("/root/testdata/sf0.1")) {
-      val res = Bench.run(spark, sf, "/tmp/graft_bench_smoke_drift2.json")
-        .fold(err => fail(s"Bench.run refused: $err"), identity)
-      assert(res.full.contains(""""drift_vs_committed":null"""),
-        s"sf mismatch must disable drift: ${res.full}")
-      assert("""\"drift_outliers\":null""".r.findFirstIn(res.compact).isDefined, res.compact)
-      // same didn't-check discipline for the scaling-coupled counters:
-      // SCALING=0 means the consistency cross-check and the scaling
-      // retry gate never executed — null, never a "checked, clean" 0
-      assert("""\"consistency_warnings\":null""".r.findFirstIn(res.compact).isDefined, res.compact)
-      assert("""\"retried_scaling\":null""".r.findFirstIn(res.compact).isDefined, res.compact)
-    }
-  }
-
-  test("Bench.run: a malformed committed reference warns and disables drift, never aborts the bench") {
-    val f = java.io.File.createTempFile("graft_committed_bad_", ".json")
-    f.deleteOnExit()
-    val w = new java.io.PrintWriter(f, "UTF-8")
-    try w.println("""{not json at all""") finally w.close()
-    withProps(
-      "SPARK_GRAFT_ONLY" -> "q01",
-      "SPARK_GRAFT_BEST_OF" -> "1",
-      "SPARK_GRAFT_SCALING" -> "0",
-      "SPARK_GRAFT_BENCH_COMMITTED" -> f.getAbsolutePath) {
-      val res = Bench.run(spark, sf, "/tmp/graft_bench_smoke_drift3.json")
-        .fold(err => fail(s"malformed committed reference aborted the bench: $err"), identity)
       assert(res.failed.isEmpty)
-      assert(res.full.contains(""""drift_vs_committed":null"""),
-        s"unparseable reference must disable drift: ${res.full}")
+      for (q <- Seq("q22_person_match_self", "q61_dedupe_targets")) {
+        val sec = (""""""" + q + """":\{"sf1_sec":([0-9.E-]+)""").r
+          .findFirstMatchIn(res.full).getOrElse(fail(s"no sf1_sec for $q: ${res.full}"))
+          .group(1).toDouble
+        assert(sec > 0, s"$q sf1_sec must be positive: $sec")
+      }
+      assert(res.full.contains(""""factor":2,"""), s"sf1 factor not recorded: ${res.full}")
+      val pairs = """"candidate_pairs":\{"base_full":(\d+),"sf1":(\d+)\}""".r
+        .findFirstMatchIn(res.full)
+        .getOrElse(fail(s"no q61 sf1 candidate_pairs: ${res.full}"))
+      val (base, rep) = (pairs.group(1).toLong, pairs.group(2).toLong)
+      assert(base > 0 && rep >= base, s"q61 candidates base $base, sf1 $rep")
     }
   }
 
@@ -324,7 +191,7 @@ class BenchSmokeSpec extends SparkSpec {
 
   test("probeAdjacentSec is a true median: averages the two-probe case, middles three") {
     def qt(before: Double, after: Double, retry: Option[Double]) =
-      Bench.QueryTiming("q", 1.0, Seq(1.0), before, 0.1, after, Seq.empty, None, retry)
+      Bench.QueryTiming("q", 1.0, Seq(1.0), before, after, Seq.empty, retry)
     // two probes: the mean, NOT the hotter bracket (the committed-r11
     // review finding: s(size/2) on two elements silently takes the max)
     assert(qt(0.16, 0.08, None).probeAdjacentSec === 0.12)

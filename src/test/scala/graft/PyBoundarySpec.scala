@@ -60,4 +60,22 @@ class PyBoundarySpec extends AnyFunSuite {
     // boundary between 'a' and an astral word char
     assert(!java.util.regex.Pattern.compile(s"na$b").matcher("na𐕱").find())
   }
+
+  test("translate reads a ] right after [ or [^ as a class member, as Java and python do") {
+    val rs = String.valueOf(0x1e.toChar) // in python's \s, not in Java's (?U)\s
+    for (tr <- Seq[String => String](Regexes.pyS, Regexes.pySFast)) {
+      // \s stays in its class: the body form, not the standalone class
+      assert(tr("[]\\s]") === "[]" + Regexes.PySBody + "]")
+      assert(tr("[^]\\s]") === "[^]" + Regexes.PySBody + "]")
+      // the class closes at the SECOND ]: a \s after it is outside again
+      assert(tr("[]a]\\s") === "[]a]" + Regexes.PyS)
+      val in = java.util.regex.Pattern.compile(tr("[]\\s]"))
+      val out = java.util.regex.Pattern.compile(tr("[^]\\s]"))
+      for (m <- Seq("]", " ", rs)) {
+        assert(in.matcher(m).matches(), s"[]\\s] must match '$m'")
+        assert(!out.matcher(m).matches(), s"[^]\\s] must not match '$m'")
+      }
+      assert(!in.matcher("a").matches() && out.matcher("a").matches())
+    }
+  }
 }

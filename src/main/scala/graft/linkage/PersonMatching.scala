@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.SessionHygiene.TrackedCheckpoint
+import graft.expressions.{PersonColumns, PersonKernels}
 
 /** Blocked fuzzy similarity join + top-k person matching (SURVEY
   * J5/A7/E9/W1/J4; reference `src/aroa_etl/person_matching/matching.py`).
@@ -19,6 +20,12 @@ import graft.core.SessionHygiene.TrackedCheckpoint
   * `(prefix, length-band)` bucket keys, so the plan is
   * shuffle-hash/sort-merge joinable and AQE can handle hot buckets
   * (common surnames) with skew splitting at 100 TB.
+  *
+  * Both per-row kernels are native expressions in `graft.expressions`,
+  * compiled into the generated code of their stage: `BucketKeyPairs`
+  * yields each row's `(fb, lb)` keys in one pass over the name bytes, and
+  * `PersonSimilarity` scores the two structs in place, skipping the name
+  * kernels when even a perfect name score cannot reach `minScore`.
   *
   * Tie-break note: the reference resolves equal scores by its sequential
   * iteration order, which has no distributed meaning; this engine breaks
@@ -37,14 +44,10 @@ object PersonMatching {
     * tab/newline kept — then split on the literal space. Both engines
     * therefore assume the `*_processed` name domain (lowercase and
     * spaces only, the preprocessing chain's output); outside that
-    * domain they mutilate identically.
+    * domain they mutilate identically. `lenUnits <= 0` throws.
     */
-  def bucketKeys(name: Column, idxChars: Int, lenUnits: Int): Column = {
-    val cleaned = regexp_replace(name, "[^a-z\\s]", "")
-    val subs = filter(split(cleaned, " "), s => s =!= "")
-    transform(subs, s =>
-      concat_ws("|", substring(s, 1, idxChars), floor(length(s) / lenUnits).cast("string")))
-  }
+  def bucketKeys(name: Column, idxChars: Int, lenUnits: Int): Column =
+    PersonColumns.bucketKeys(name, idxChars, lenUnits)
 
   /** Candidate `(srcID, trgID, __srcP, __trgP)` rows: a src and a trg
     * row sharing a first-name bucket AND a last-name bucket, each with
@@ -68,19 +71,16 @@ object PersonMatching {
       src: DataFrame, trg: DataFrame, cfg: MatchConfig,
       pairPredicate: Column): DataFrame = {
     def exploded(df: DataFrame, id: String, person: String) = {
-      val e = df
-        .select(col(id), personStruct(df, cfg).as(person),
-          explode(bucketKeys(col(cfg.gnameCol), cfg.idxChars, cfg.lenUnits)).as("fb"),
-          col(cfg.lnameCol))
-        .select(col(id), col(person), col("fb"),
-          explode(bucketKeys(col(cfg.lnameCol), cfg.idxChars, cfg.lenUnits)).as("lb"))
+      val e = df.select(col(id), personStruct(df, cfg).as(person),
+        inline(PersonColumns.bucketKeyPairs(col(cfg.gnameCol), col(cfg.lnameCol),
+          cfg.idxChars, cfg.lenUnits)))
       capBuckets(e, id, effectiveMaxBucketSize(cfg))
     }
     val s = exploded(src, "srcID", "__srcP")
     val t = exploded(trg, "trgID", "__trgP")
     // the join runs at the width capBuckets' (fb, lb) repartition pinned
     // (both sides share that partitioning), and so does the scoring fused
-    // after it: no exchange sits between the join and the score UDF
+    // after it: no exchange sits between the join and the scorer
     val pairs = s.join(t, Seq("fb", "lb"))
       .select("srcID", "trgID", "__srcP", "__trgP")
       .filter(pairPredicate)
@@ -210,99 +210,11 @@ object PersonMatching {
       useSimpleDateMatcher: Boolean = false,
       // per-bucket membership ceiling; ≤0 disables (see capBuckets)
       maxBucketSize: Int = 10000,
-      // score via the codegen'd column expression instead of the UDF —
-      // see the measurement note in the private `score`
-      useExpressionScorer: Boolean = false,
       // src and trg are the SAME dataset: score each unordered pair once
       // (srcID <= trgID) and mirror — valid because every default kernel
       // (token-set, Indel, date-with-swap) is symmetric; rejected with
       // the asymmetric simple-date matcher
       selfJoinMirror: Boolean = false)
-
-  /** The reference's `__not_empty` gate as a column: non-null, non-empty
-    * and not one of the missing-value sentinels, for the column scorer
-    * below.
-    */
-  private[graft] def notEmptyCol(c: Column): Column =
-    c.isNotNull && length(c) > 0 && !c.isin("00000000", "-1.0", "-1")
-
-  /** The E5 token-set kernel with the -1 not-comparable sentinel — the
-    * expensive half of the score.
-    *
-    * A "memoize the kernel per DISTINCT name pair and broadcast-join it
-    * back" variant was built and A/B'd twice, and LOST both times, so it
-    * was deleted rather than shipped as a flag: on q22's equal-heavy
-    * corpus (6.3M pairs, 64×64 name combos) memo 23.8/24.9 s vs direct
-    * 20.4/21.0 s; on a Zipf corpus DESIGNED for it (60k rows, co-bucketed
-    * names differ-but-repeat, 400+16-word vocabulary, hot buckets) memo
-    * 5.99/6.04 s vs direct 2.25/2.06 s — 2.8× slower. The distinct +
-    * two broadcast joins + a localCheckpoint cost more than they save
-    * because the codegen'd kernel is already cheap per pair and its
-    * equal-input fast path short-circuits the common case.
-    */
-  private[graft] def setScoreCol(a: Column, b: Column): Column =
-    when(notEmptyCol(a) && notEmptyCol(b),
-      graft.expressions.FuzzColumns.tokenSetRatio(a, b)).otherwise(lit(-1.0))
-
-  /** E6 `person_similarity` as a pure column expression over the native
-    * codegen'd kernels — identical arithmetic (and FP association) to
-    * `Similarity.personSimilarity`, but no per-pair Row conversion,
-    * boxing or UDF dispatch. The blocked join runs it only under
-    * `useExpressionScorer`; its default scorer is the UDF (see the
-    * measurement note in `score`).
-    */
-  private[graft] def personSimilarityColumn(
-      s: PersonCols, t: PersonCols,
-      useDate: Boolean, usePrisoner: Boolean, usePob: Boolean,
-      nameOnly: Boolean, simpleDate: Boolean): Column = {
-    val primary =
-      (greatest(lit(0.0), setScoreCol(s.lname, t.lname)) +
-        greatest(lit(0.0), setScoreCol(s.gname, t.gname))) / 2
-    combineScores(primary, s, t, useDate, usePrisoner, usePob, nameOnly, simpleDate)
-  }
-
-  /** Everything after `primary` in E6's combiner — shared by the inline
-    * expression scorer and the memoized-primary path; arithmetic and FP
-    * association identical to `Similarity.personSimilarity`.
-    */
-  private def combineScores(
-      primary: Column, s: PersonCols, t: PersonCols,
-      useDate: Boolean, usePrisoner: Boolean, usePob: Boolean,
-      nameOnly: Boolean, simpleDate: Boolean): Column = {
-    import graft.expressions.FuzzColumns
-    def notEmpty(c: Column): Column = notEmptyCol(c)
-    def ratioScore(a: Column, b: Column): Column =
-      when(notEmpty(a) && notEmpty(b), FuzzColumns.indelRatio(a, b)).otherwise(lit(-1.0))
-
-    if (nameOnly) return primary
-
-    val dateK =
-      if (!useDate) None
-      else {
-        val raw =
-          if (simpleDate)
-            when(notEmpty(s.dob) && notEmpty(t.dob),
-              graft.functions.Udfs.simpleDateMatcher(s.dob, t.dob)).otherwise(lit(-1.0))
-          else coalesce(FuzzColumns.dateSimilarity(s.dob, t.dob), lit(-1.0))
-        Some(greatest(lit(0.0), raw))
-      }
-    val prisK = if (usePrisoner) Some(ratioScore(s.prisoner, t.prisoner)) else None
-    val secondary: Column = (prisK, dateK) match {
-      case (Some(p), Some(d)) => when(p >= 0, (p + d) / 2).otherwise(d)
-      case (None, Some(d))    => d
-      case (Some(p), None)    => when(p >= 0, p).otherwise(lit(0.0))
-      case (None, None)       => lit(0.0)
-    }
-    val other: Column =
-      if (usePob) ratioScore(s.pob, t.pob) else lit(-1.0)
-
-    val afterSec = when(secondary >= 0,
-      lit(2.0 / 3) * primary + lit(1.0 / 3) * secondary).otherwise(primary)
-    when(other >= 0, lit(3.0 / 4) * afterSec + lit(1.0 / 4) * other).otherwise(afterSec)
-  }
-
-  private[graft] final case class PersonCols(
-      gname: Column, lname: Column, dob: Column, pob: Column, prisoner: Column)
 
   /** Scored candidate pairs only (no top-k, no sentinels): the building
     * block clustering uses for edge generation. `pairPredicate` prunes
@@ -323,8 +235,8 @@ object PersonMatching {
       .dropDuplicates("srcID", "trgID")
 
   /** The five scorer inputs as one struct column; columns absent from
-    * `df` surface as null strings. Field ORDER is load-bearing: the
-    * default scorer UDF reads positionally (`getString(0..4)`), so
+    * `df` surface as null strings. Field ORDER is load-bearing:
+    * `PersonSimilarity` reads the fields by ordinal, so
     * gname/lname/dob/pob/prisoner must stay in exactly this order.
     */
   private def personStruct(df: DataFrame, cfg: MatchConfig): Column = {
@@ -354,72 +266,27 @@ object PersonMatching {
     * `(srcID, score, trgID)` at `score >= minScore`. The date, prisoner
     * and birthplace terms take part when their column is present on both
     * sides.
+    *
+    * The cut is an explode of a zero- or one-element array, not a
+    * `Filter`: a filter on the score is pushed through the projection
+    * into the join condition below it, with the scorer substituted for
+    * the score, while the projection keeps its own copy, so the scorer
+    * would run once per emission in the join and again per kept pair
+    * (r21). A generator's output cannot be pushed down, so
+    * `PersonSimilarity` runs once per emission, in the projection, and
+    * only the kept rows allocate an array (`PlanAuditSpec`).
     */
   private def score(
       pairs: DataFrame, src: DataFrame, trg: DataFrame, cfg: MatchConfig): DataFrame = {
     def onBothSides(c: String) = src.columns.contains(c) && trg.columns.contains(c)
-    val useDate = onBothSides(cfg.dobCol)
-    val usePrisoner = onBothSides(cfg.prisonerCol)
-    val usePob = onBothSides(cfg.pobCol)
-    val nameOnly = cfg.nameOnly
-    val simpleDate = cfg.useSimpleDateMatcher
-    val minScore = cfg.minScore
-    // The scorer stays a UDF by default: the score feeds both the
-    // cutoff Filter and the output Project, and a composite column
-    // expression is re-evaluated in each. Re-measured after hot-bucket
-    // capping landed (q22 sf0.1, 6.3M candidates, two runs each):
-    // UDF 17.5/19.7 s vs expression 28.6/24.2 s — the single-dispatch
-    // UDF still wins ~1.4×; cost is dominated by the string kernels
-    // either way. `useExpressionScorer` keeps the codegen path
-    // selectable for filter-pushdown use cases; it reads the same
-    // struct fields the UDF does.
-    // A FLAT 10-string-arg UDF (no per-pair Row structs) was also
-    // A/B'd (q22 sf0.1, best-of-4, two pairs): flat 5.60/5.47 s vs
-    // struct 6.01/5.35 s — each variant won one pair, differences
-    // inside the probe-window spread, so the Row cost is not where
-    // q22's time goes; the struct form stays (it is also what the
-    // blocked join carries through its bucket explode).
-    // The UDF prunes at the cutoff: it is handed `minScore` and skips
-    // both token-set name kernels when even a perfect name score cannot
-    // reach it — exact for the `>= minScore` filter below (see
-    // Similarity.personSimilarity). The expression scorer does not prune:
-    // its filter evaluates the full expression for every candidate.
-    val scoreCol =
-      if (cfg.useExpressionScorer) {
-        def fields(p: String) = PersonCols(col(s"$p.gname"), col(s"$p.lname"),
-          col(s"$p.dob"), col(s"$p.pob"), col(s"$p.prisoner"))
-        personSimilarityColumn(fields("__srcP"), fields("__trgP"),
-          useDate, usePrisoner, usePob, nameOnly, simpleDate)
-      } else {
-        val scoreUdf = udf { (s: org.apache.spark.sql.Row, t: org.apache.spark.sql.Row) =>
-          // positional access: getAs-by-name costs a field-index hash lookup
-          // per field per pair — 10 per score, tens of millions per join.
-          // Field order is pinned by personStruct.
-          def p(r: org.apache.spark.sql.Row) = graft.similarity.Similarity.Person(
-            r.getString(0), r.getString(1), r.getString(2),
-            r.getString(3), r.getString(4))
-          graft.similarity.Similarity.personSimilarity(p(s), p(t),
-            useDate = useDate, usePrisoner = usePrisoner, usePob = usePob,
-            nameOnly = nameOnly,
-            dateMatcher =
-              if (simpleDate) graft.similarity.Similarity.simpleDateMatcher
-              else graft.similarity.Similarity.dateSimilarity,
-            minScore = minScore)
-        }.asNondeterministic()
-        // asNondeterministic (r21, guide §4.4): the minScore filter over the
-        // projected score otherwise gets substituted and PUSHED INTO the
-        // join below as a join condition while the projection keeps its own
-        // copy — the executed r21-baseline plan evaluated the kernel UDF
-        // TWICE per surviving pair (BroadcastHashJoin ..., (UDF(..) >= 80.0)
-        // under Project [UDF(..) AS score]), doubling the dominant CPU cost
-        // of every blocked join. The kernel is pure, so the only semantic
-        // effect of the flag is blocking that duplication.
-        scoreUdf(col("__srcP"), col("__trgP"))
-      }
+    val flags = PersonKernels.flags(useDate = onBothSides(cfg.dobCol),
+      usePrisoner = onBothSides(cfg.prisonerCol), usePob = onBothSides(cfg.pobCol),
+      nameOnly = cfg.nameOnly, simpleDate = cfg.useSimpleDateMatcher)
+    val s = col("__score")
     pairs
-      .withColumn("score", scoreCol)
-      .filter(col("score") >= minScore)
-      .select(col("srcID"), col("score"), col("trgID"))
+      .select(col("srcID"), col("trgID"), PersonColumns.personSimilarity(
+        col("__srcP"), col("__trgP"), flags, cfg.minScore).as("__score"))
+      .select(col("srcID"), explode(when(s >= cfg.minScore, array(s))).as("score"), col("trgID"))
   }
 
   /** J5 `person_matching` (matching.py:29-94): returns

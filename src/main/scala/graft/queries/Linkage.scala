@@ -397,12 +397,9 @@ object Linkage {
     * only if the column exists), the filtered-prisoner-vs-clamped-date
     * asymmetry inside the secondary mean, and the two conditional folds —
     * ran only under the one production flag set. q54 scores each orders
-    * row under SIX flag combinations at once through
-    * `PersonMatching.personSimilarityColumn` as six parallel columns.
-    * That column expression is the opt-in `useExpressionScorer` path;
-    * the blocked join scores with a UDF over
-    * `Similarity.personSimilarity`, whose combiner arithmetic the
-    * expression repeats term for term.
+    * row under SIX flag combinations at once as six parallel columns of
+    * the blocked join's own scorer, `graft.expressions.PersonSimilarity`
+    * (no cutoff), over one person struct per side.
     *
     * The fields are constructed so every KERNEL score is forced by
     * construction (equal strings → 100, empty/sentinel → filtered −1,
@@ -421,7 +418,7 @@ object Linkage {
     * association, so all six score columns compare bit-exact.
     */
   private def q54(spark: SparkSession, dir: String): DataFrame = {
-    import graft.linkage.PersonMatching.{PersonCols, personSimilarityColumn}
+    import graft.expressions.{PersonColumns, PersonKernels}
     val o = Tables.orders(spark, dir)
     val k = col("o_orderkey")
     // one parquet split at bench SFs: spread the six scorer columns
@@ -448,11 +445,14 @@ object Linkage {
         .otherwise(lit("19430312")).as("td"),
       when(pmod(k, lit(2)) === 1, lit("")).otherwise(lit("berlin")).as("sp"),
       lit("berlin").as("tp"))
-    val s = PersonCols(col("sg"), col("sl"), col("sd"), col("sp"), col("sn"))
-    val t = PersonCols(col("tg"), col("tl"), col("td"), col("tp"), col("tn"))
+    // field order (gname, lname, dob, pob, prisoner) is the scorer's
+    val s = struct(col("sg"), col("sl"), col("sd"), col("sp"), col("sn"))
+    val t = struct(col("tg"), col("tl"), col("td"), col("tp"), col("tn"))
     def sim(useDate: Boolean, usePrisoner: Boolean, usePob: Boolean,
         nameOnly: Boolean, simpleDate: Boolean) =
-      personSimilarityColumn(s, t, useDate, usePrisoner, usePob, nameOnly, simpleDate)
+      PersonColumns.personSimilarity(s, t,
+        PersonKernels.flags(useDate, usePrisoner, usePob, nameOnly, simpleDate),
+        Double.NegativeInfinity)
     rows.select(col("o_orderkey"),
         sim(useDate = true, usePrisoner = true, usePob = true,
           nameOnly = false, simpleDate = false).as("score_full"),

@@ -1,13 +1,16 @@
 package graft.similarity
 
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.Fuzz
 
 /** Person-similarity measures (SURVEY E1–E6; reference
   * `src/aroa_etl/person_matching/similarity_measures.py`).
   *
-  * Pure Scala kernels — they run inside the blocked similarity join's
-  * score UDF and inside clustering's per-component refinement. All scores
-  * are 0–100 with −1 = "not comparable" (absent/empty field).
+  * Pure Scala kernels over Java strings — clustering's per-component
+  * refinement calls [[personSimilarity]]; the blocked join scores with
+  * `graft.expressions.PersonSimilarity`, which reads the same fields as
+  * UTF-8 bytes and shares this object's date parse and combiner. All
+  * scores are 0–100 with −1 = "not comparable" (absent/empty field).
   */
 object Similarity {
 
@@ -28,14 +31,18 @@ object Similarity {
     if (p < 0) None else Some((p / 10000, p / 100 % 100, p % 100))
   }
 
-  /** `n` ASCII digits of `s` from `from` as an Int, or −1 if any is not
-    * one (Java's `\d` is ASCII-only, so other Unicode digits reject).
+  /** [[parseDate]] as `y * 10000 + m * 100 + d`, or −1 when rejected,
+    * parsed from the string's UTF-8 bytes.
     */
-  private def asciiDigits(s: String, from: Int, n: Int): Int = {
+  private def packedDate(s: String): Int =
+    if (s == null) -1 else packedDate(UTF8String.fromString(s))
+
+  /** `n` ASCII digit bytes of `u` from `from` as an Int, or −1. */
+  private def asciiDigits(u: UTF8String, from: Int, n: Int): Int = {
     var v = 0
     var i = from
     while (i < from + n) {
-      val c = s.charAt(i)
+      val c = u.getByte(i)
       if (c < '0' || c > '9') return -1
       v = v * 10 + (c - '0')
       i += 1
@@ -43,26 +50,28 @@ object Similarity {
     v
   }
 
-  /** [[parseDate]] as `y * 10000 + m * 100 + d`, or −1 when rejected.
+  /** [[parseDate]]'s packed value from UTF-8 bytes, or −1 when rejected.
     * Accepts exactly the strings of the whole-input regexes
     * `(\d{4})(\d{2})(\d{2})\.?0?` and `(\d{2})\.(\d{2})\.(\d{4})`
-    * without a regex match or an allocation — it runs twice per scored
-    * pair inside the blocked join's UDF.
+    * (Java's `\d` is ASCII-only) without a regex match or an allocation:
+    * an accepted string is all ASCII, where bytes and chars coincide, and
+    * any other character puts a byte >= 0x80 at a checked position
+    * (`ParseDateSpec`). The person expression calls it on the struct's
+    * bytes in place.
     */
-  private def packedDate(s: String): Int = {
-    if (s == null) return -1
-    val n = s.length
-    if (n == 10 && s.charAt(2) == '.' && s.charAt(5) == '.') {
-      val d = asciiDigits(s, 0, 2)
-      val m = asciiDigits(s, 3, 2)
-      val y = asciiDigits(s, 6, 4)
+  private[graft] def packedDate(u: UTF8String): Int = {
+    if (u == null) return -1
+    val n = u.numBytes
+    if (n == 10 && u.getByte(2) == '.' && u.getByte(5) == '.') {
+      val d = asciiDigits(u, 0, 2)
+      val m = asciiDigits(u, 3, 2)
+      val y = asciiDigits(u, 6, 4)
       if (d < 0 || m < 0 || y < 0) -1 else y * 10000 + m * 100 + d
     } else if (n >= 8 && n <= 10) {
-      // yyyymmdd read as one 8-digit number is already the packed form
-      val ymd = asciiDigits(s, 0, 8)
+      val ymd = asciiDigits(u, 0, 8)
       val tailOk = n == 8 ||
-        (n == 9 && (s.charAt(8) == '.' || s.charAt(8) == '0')) ||
-        (n == 10 && s.charAt(8) == '.' && s.charAt(9) == '0')
+        (n == 9 && (u.getByte(8) == '.' || u.getByte(8) == '0')) ||
+        (n == 10 && u.getByte(8) == '.' && u.getByte(9) == '0')
       if (tailOk) ymd else -1
     } else -1
   }
@@ -73,9 +82,11 @@ object Similarity {
   /** E2 `date_similarity`: per-part scores with zero-parts excluded and a
     * day↔month swap tried both ways (the better sum wins).
     */
-  def dateSimilarity(date1: String, date2: String): Double = {
-    val a = packedDate(date1)
-    val b = packedDate(date2)
+  def dateSimilarity(date1: String, date2: String): Double =
+    packedDateSimilarity(packedDate(date1), packedDate(date2))
+
+  /** [[dateSimilarity]] over two [[packedDate]] values (−1 = rejected). */
+  private[graft] def packedDateSimilarity(a: Int, b: Int): Double = {
     if (a < 0 || b < 0) return -1.0
     val m1 = a / 100 % 100
     val d1 = a % 100
@@ -111,91 +122,17 @@ object Similarity {
     shared / 3.0 * 100.0
   }
 
-  /** Bounded per-thread memo for the short-string scoring kernels (r21).
-    *
-    * The blocked joins score millions of candidate pairs, but the DISTINCT
-    * (name, name) argument pairs number in the thousands —
-    * name corpora are Zipf-distributed, and co-bucketed candidates share
-    * prefixes by construction — so a hash probe (≈50 ns) replaces a
-    * 1-3 µs kernel on almost every call. Pure functions, so memoization
-    * is semantics-free; per-THREAD maps need no synchronization on the
-    * hot path. Long inputs bypass the memo (keys would hold big strings
-    * for a low hit rate — free text goes through the registered SQL UDFs,
-    * not these person matchers). `clear()` on overflow keeps residency
-    * bounded at cap × threads with zero bookkeeping; a full-and-cleared
-    * map just re-fills from the live key distribution.
-    *
-    * It no longer serves dates. Birth dates spread over some 17k distinct
-    * values, so (date, date) pairs are nearly unique, as prisoner numbers
-    * are (see [[idMatcher]]): a date memo mostly missed, kept clearing,
-    * and paid a key build and a probe that, profiled on the blocked join,
-    * cost more than the allocation-free [[dateSimilarity]] they fronted.
-    *
-    * NOTE: a plan-level memo (distinct pairs + broadcast join-back) was
-    * A/B'd twice in earlier rounds and LOST (see PersonMatching's
-    * setScoreCol scaladoc) — the shuffles cost more than the kernels.
-    * This is the opposite shape: no plan change, no shuffle, just a
-    * thread-local cache inside the existing UDF dispatch.
+  /** E4 `name_matcher` = `fuzz.ratio` with default_process, for
+    * birthplaces and prisoner numbers. Not memoized: one `match` batch
+    * holds some 45k distinct birthplace pairs, and there the kernel alone
+    * is faster than a per-thread pair memo (116 against 159 ns per pair).
     */
-  private final class PairMemo(cap: Int, maxKeyChars: Int) {
-    // SoftReference-wrapped (r22, r21 ADVICE): executor task threads are
-    // pooled and long-lived, so a plain ThreadLocal map pins
-    // cap × threads entries (order 100 MB across 3 memos at 32 threads)
-    // for the life of the JVM even after every query finished. A soft
-    // ref keeps the hot-path cost at one extra dereference while letting
-    // the GC reclaim idle memos under heap pressure — the memo is a pure
-    // cache, so reclamation only costs re-computation.
-    private val tl = new ThreadLocal[java.lang.ref.SoftReference[
-        java.util.HashMap[String, java.lang.Double]]] {
-      override def initialValue(): java.lang.ref.SoftReference[
-          java.util.HashMap[String, java.lang.Double]] =
-        new java.lang.ref.SoftReference(
-          new java.util.HashMap[String, java.lang.Double](256))
-    }
-    def apply(a: String, b: String)(f: (String, String) => Double): Double = {
-      if (a == null || b == null || a.length + b.length > maxKeyChars) return f(a, b)
-      var m = tl.get().get()
-      if (m == null) {
-        m = new java.util.HashMap[String, java.lang.Double](256)
-        tl.set(new java.lang.ref.SoftReference(m))
-      }
-      // length-prefixed key: a separator char alone would be ambiguous
-      // for inputs that may CONTAIN it ("a b"+"c" vs "a"+"b c")
-      val k = new java.lang.StringBuilder(a.length + b.length + 4)
-        .append(a.length).append(':').append(a).append(b).toString
-      val hit = m.get(k)
-      if (hit != null) return hit.doubleValue()
-      val v = f(a, b)
-      if (m.size >= cap) m.clear()
-      m.put(k, v)
-      v
-    }
-  }
-  private val nameMemo = new PairMemo(cap = 1 << 14, maxKeyChars = 64)
-  private val setMemo = new PairMemo(cap = 1 << 14, maxKeyChars = 64)
-
-  /** E4 `name_matcher` = `fuzz.ratio` with default_process. */
   def nameMatcher(src: String, target: String): Double =
-    nameMemo(src, target)(ratioOrAbsent)
-
-  private val ratioOrAbsent: (String, String) => Double = (a, b) =>
-    if (notEmpty(a) && notEmpty(b)) Fuzz.ratio(a, b) else -1.0
-
-  /** [[nameMatcher]] without the pair memo — for identifier-like fields
-    * (prisoner numbers) whose VALUES are near-unique per row, so
-    * (a, b) pairs essentially never repeat at any scale: the memo can't
-    * hit, every probe pays a key allocation, and the unique keys flood
-    * the 16k-cap map and `clear()` away the hot name/birthplace entries
-    * sharing it. Identical arithmetic to [[nameMatcher]].
-    */
-  private def idMatcher(src: String, target: String): Double =
-    ratioOrAbsent(src, target)
+    if (notEmpty(src) && notEmpty(target)) Fuzz.ratio(src, target) else -1.0
 
   /** E5 `name_set_matcher` = `fuzz.token_set_ratio`. */
   def nameSetMatcher(src: String, target: String): Double =
-    setMemo(src, target) { (a, b) =>
-      if (notEmpty(a) && notEmpty(b)) Fuzz.tokenSetRatio(a, b) else -1.0
-    }
+    if (notEmpty(src) && notEmpty(target)) Fuzz.tokenSetRatio(src, target) else -1.0
 
   /** A person record for matching/clustering; null field = absent. */
   final case class Person(
@@ -238,41 +175,47 @@ object Similarity {
     var secondary = -1.0
     var other = -1.0
     if (!nameOnly) {
-      // allocation-free (r22): the filtered fold is unrolled keeping the
-      // exact element ORDER (prisoner before date) and per-branch
-      // admission (>= 0) of the previous Seq pipeline, so every sum/size
-      // is bit-identical. Prisoner numbers go through the UNMEMOIZED
-      // kernel — identifier pairs never repeat (see idMatcher).
-      var ksum = 0.0
-      var kn = 0
-      if (usePrisoner) {
-        val p = idMatcher(src.prisonerNumber, trg.prisonerNumber)
-        if (p >= 0) { ksum += p; kn += 1 }
-      }
-      if (useDate) {
-        val d = math.max(0, dateMatcher(src.dob, trg.dob))
-        if (d >= 0) { ksum += d; kn += 1 }
-      }
-      secondary =
-        if (kn > 0) ksum / kn
-        else if (nonNamesOptional) -1.0
-        else 0.0
-      if (usePob) {
-        val o = nameMatcher(src.pob, trg.pob)
-        if (o >= 0) other = o
-      }
+      secondary = secondaryTerm(
+        if (usePrisoner) nameMatcher(src.prisonerNumber, trg.prisonerNumber) else -1.0,
+        if (useDate) math.max(0, dateMatcher(src.dob, trg.dob)) else -1.0,
+        nonNamesOptional)
+      if (usePob) other = nameMatcher(src.pob, trg.pob)
     }
     val bound = combine(100.0, secondary, other)
     if (bound < minScore) return bound
-    // both addends are >= 0.0 (max(0, .)), so dropping Seq.sum's leading
-    // 0.0 + changes nothing in IEEE doubles
-    val primary = (math.max(0, nameSetMatcher(src.lname, trg.lname)) +
-      math.max(0, nameSetMatcher(src.gname, trg.gname))) / 2
-    combine(primary, secondary, other)
+    combine(primaryTerm(nameSetMatcher(src.lname, trg.lname),
+      nameSetMatcher(src.gname, trg.gname)), secondary, other)
   }
 
+  // E6's combiner, in three pieces shared with the blocked join's
+  // `graft.expressions.PersonSimilarity`, so both scorers run the same
+  // floating-point operations in the same order.
+
+  /** The mean of the present prisoner and date scores (a negative one is
+    * absent; a used date is clamped to >= 0 and so always present), or,
+    * with neither, 0 (−1 = absent under `nonNamesOptional`). The filtered
+    * fold keeps the reference's element order, prisoner before date.
+    */
+  private[graft] def secondaryTerm(
+      prisoner: Double, date: Double, nonNamesOptional: Boolean): Double = {
+    var ksum = 0.0
+    var kn = 0
+    if (prisoner >= 0) { ksum += prisoner; kn += 1 }
+    if (date >= 0) { ksum += date; kn += 1 }
+    if (kn > 0) ksum / kn
+    else if (nonNamesOptional) -1.0
+    else 0.0
+  }
+
+  /** The mean of the two token-set name scores, each clamped to >= 0.
+    * Both addends are >= 0.0, so dropping `Seq.sum`'s leading `0.0 +`
+    * changes nothing in IEEE doubles.
+    */
+  private[graft] def primaryTerm(lname: Double, gname: Double): Double =
+    (math.max(0, lname) + math.max(0, gname)) / 2
+
   /** E6's folds; a negative `secondary` or `other` is absent. */
-  private def combine(primary: Double, secondary: Double, other: Double): Double = {
+  private[graft] def combine(primary: Double, secondary: Double, other: Double): Double = {
     var score = primary
     if (secondary >= 0) score = 2.0 / 3 * score + 1.0 / 3 * secondary
     if (other >= 0) score = 3.0 / 4 * score + 1.0 / 4 * other

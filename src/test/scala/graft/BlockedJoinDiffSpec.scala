@@ -11,9 +11,11 @@ import graft.similarity.Similarity
 /** Differential spec for the blocked join. `PersonMatching` scores every
   * bucket-join emission with the person structs carried through the
   * bucket explode, then deduplicates only the kept pairs. The oracle is
-  * the retired shape, kept here: a narrow `(id, fb, lb)` explode under
-  * the same cap, a distinct over `(srcID, trgID)`, then the attach joins
-  * of `PersonMatching.scorePairs`. The top-k, target dedup and sentinel
+  * the retired shape, kept here: a narrow `(id, fb, lb)` explode of the
+  * retired regex/lambda key chain ([[RetiredBucketKeys]], so the oracle
+  * does not share the native key generator) under the same cap, a
+  * distinct over `(srcID, trgID)`, then the attach joins of
+  * `PersonMatching.scorePairs`. The top-k, target dedup and sentinel
   * steps of `personMatching` are replayed on the driver over the oracle's
   * pairs.
   *
@@ -75,10 +77,10 @@ class BlockedJoinDiffSpec extends SparkSpec {
     def exploded(df: DataFrame, id: String) = {
       val e = df
         .select(col(id),
-          explode(PersonMatching.bucketKeys(col(cfg.gnameCol), cfg.idxChars, cfg.lenUnits)).as("fb"),
+          explode(RetiredBucketKeys(col(cfg.gnameCol), cfg.idxChars, cfg.lenUnits)).as("fb"),
           col(cfg.lnameCol))
         .select(col(id), col("fb"),
-          explode(PersonMatching.bucketKeys(col(cfg.lnameCol), cfg.idxChars, cfg.lenUnits)).as("lb"))
+          explode(RetiredBucketKeys(col(cfg.lnameCol), cfg.idxChars, cfg.lenUnits)).as("lb"))
       val w = Window.partitionBy(col("fb"), col("lb")).orderBy(hash(col(id)), col(id))
       e.withColumn("__rank", row_number().over(w))
         .filter(col("__rank") <= cfg.maxBucketSize)
@@ -144,20 +146,19 @@ class BlockedJoinDiffSpec extends SparkSpec {
       ("cross, nameOnly", p, q, lit(true), base.copy(nameOnly = true, minScore = 70.0)),
       ("cross, simple date", p, q, lit(true), base.copy(useSimpleDateMatcher = true)))
     val byId = (pRows ++ qRows).map(r => r._1 -> Similarity.Person(r._2, r._3, r._4, r._5, r._6)).toMap
-    for ((name, s, t, pred, cfg0) <- cases; expr <- Seq(false, true)) {
-      val cfg = cfg0.copy(useExpressionScorer = expr)
+    for ((name, s, t, pred, cfg) <- cases) {
       val (src, trg) = (asSrc(s), asTrg(t))
       val oracle = oracleScored(src, trg, cfg, pred)
       val got = triples(PersonMatching.scoredPairs(src, trg, cfg, pred))
       assert(oracle.nonEmpty, s"$name: nothing reaches the cutoff")
-      assert(got === oracle, s"$name, expression scorer = $expr")
+      assert(got === oracle, name)
       // the oracle shares the scorer with the path under test, so its
       // scores are also checked against the kernel on the driver
       oracle.foreach { case (a, score, b) =>
         val exact = Similarity.personSimilarity(byId(a), byId(b), nameOnly = cfg.nameOnly,
           dateMatcher =
             if (cfg.useSimpleDateMatcher) Similarity.simpleDateMatcher else Similarity.dateSimilarity)
-        assert(score === exact, s"$name, expression scorer = $expr: ($a, $b)")
+        assert(score === exact, s"$name: ($a, $b)")
       }
     }
   }
@@ -170,18 +171,15 @@ class BlockedJoinDiffSpec extends SparkSpec {
       assert(matching(PersonMatching.personMatching(src, trg, cfg)) ===
         oracleMatching(scored, pRows.map(_._1), cfg), s"topN $topN, allowDuplicates $allowDuplicates")
     }
-    val exprCfg = base.copy(topN = 3, useExpressionScorer = true)
-    assert(matching(PersonMatching.personMatching(src, trg, exprCfg)) ===
-      oracleMatching(oracleScored(src, trg, exprCfg, lit(true)), pRows.map(_._1), exprCfg))
   }
 
   test("selfJoinMirror equals top-k over the oracle's full self-join") {
     val (src, trg) = (asSrc(p), asTrg(p))
-    for ((topN, expr) <- Seq((1, false), (3, false), (Int.MaxValue, false), (3, true))) {
-      val cfg = base.copy(topN = topN, useExpressionScorer = expr)
+    for (topN <- Seq(1, 3, Int.MaxValue)) {
+      val cfg = base.copy(topN = topN)
       val want = oracleMatching(oracleScored(src, trg, cfg, lit(true)), pRows.map(_._1), cfg)
       assert(matching(PersonMatching.personMatching(src, trg, cfg.copy(selfJoinMirror = true))) ===
-        want, s"topN $topN, expression scorer = $expr")
+        want, s"topN $topN")
     }
   }
 }

@@ -2,11 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
+import org.apache.spark.unsafe.types.UTF8String
+import graft.expressions.FuzzKernels
 import graft.similarity.Similarity
 
 /** Differential check of the hand-written date parser and the unrolled
   * `dateSimilarity` against the regex parser and `Seq` fold they replace,
-  * which are kept here as the oracle.
+  * which are kept here as the oracle. The parse reads UTF-8 bytes, so
+  * the oracle also checks it on the bytes the person expression reads.
   */
 class ParseDateSpec extends AnyFunSuite {
 
@@ -78,13 +81,15 @@ class ParseDateSpec extends AnyFunSuite {
       assert(Similarity.parseDate(s) === None, s"input=${String.valueOf(s)}")
   }
 
-  test("parseDate agrees with the regexes on seeded random strings near the date shapes") {
+  /** 20k seeded strings, half random over a date-ish alphabet and half a
+    * valid shape mutated in one position, so most sit next to an
+    * accepted shape rather than far from every one.
+    */
+  private def nearDates(): Seq[String] = {
     val rnd = new Random(0xda7e)
     val alphabet = "0123456789012345678901234567890.. \n+-/\u0661\uff11x".toCharArray
     def randomString(): String =
       Array.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
-    // mutate a valid date in one position, so most inputs sit next to
-    // an accepted shape rather than far from every one
     def mutated(): String = {
       val base = new StringBuilder(shapes(2 + rnd.nextInt(20)))
       rnd.nextInt(3) match {
@@ -95,9 +100,12 @@ class ParseDateSpec extends AnyFunSuite {
       }
       base.toString
     }
+    Seq.fill(20000)(if (rnd.nextBoolean()) randomString() else mutated())
+  }
+
+  test("parseDate agrees with the regexes on seeded random strings near the date shapes") {
     var accepted = 0
-    for (_ <- 0 until 20000) {
-      val s = if (rnd.nextBoolean()) randomString() else mutated()
+    for (s <- nearDates()) {
       val expected = oracleParse(s)
       assert(Similarity.parseDate(s) === expected, s"input=$s")
       if (expected.isDefined) accepted += 1
@@ -116,6 +124,35 @@ class ParseDateSpec extends AnyFunSuite {
       val (a, b) = (date(), date())
       assert(java.lang.Double.doubleToRawLongBits(Similarity.dateSimilarity(a, b)) ===
         java.lang.Double.doubleToRawLongBits(oracleDateSimilarity(a, b)), s"($a, $b)")
+    }
+  }
+
+  test("the byte-level parse equals the regexes on every shape and near-date") {
+    val inputs = shapes ++ nearDates()
+    var accepted = 0
+    for (s <- inputs) {
+      val want = oracleParse(s).fold(-1) { case (y, m, d) => y * 10000 + m * 100 + d }
+      // also from a view into a larger buffer, as a struct field is read
+      val views =
+        if (s == null) Seq(null)
+        else {
+          val b = s.getBytes("UTF-8")
+          Seq(UTF8String.fromString(s),
+            UTF8String.fromBytes(("x" + s + "y").getBytes("UTF-8"), 1, b.length))
+        }
+      for (u <- views) assert(Similarity.packedDate(u) === want, s"input=${String.valueOf(s)}")
+      if (want >= 0) accepted += 1
+    }
+    assert(accepted > 1000, s"accepted=$accepted")
+    // and the byte-level date kernel scores every pair bit for bit as the
+    // regex parse and Seq fold do
+    val rnd = new Random(0xda80)
+    for (_ <- 0 until 20000) {
+      val (a, b) = (inputs(rnd.nextInt(inputs.length)), inputs(rnd.nextInt(inputs.length)))
+      if (a != null && b != null)
+        assert(java.lang.Double.doubleToRawLongBits(
+          FuzzKernels.dateSimilarity(UTF8String.fromString(a), UTF8String.fromString(b))) ===
+          java.lang.Double.doubleToRawLongBits(oracleDateSimilarity(a, b)), s"($a, $b)")
     }
   }
 }

@@ -1,14 +1,22 @@
 package graft
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
+import graft.expressions.PersonKernels
 import graft.similarity.Similarity
 import graft.similarity.Similarity.Person
 
 /** Exactness of the cutoff-first person scorer: with a `minScore`, the
   * kernel may return a bound instead of the score, but only below the
   * cutoff — `s_m >= m` holds exactly when `s >= m`, and every score at or
-  * above the cutoff is the exact one, bit for bit.
+  * above the cutoff is the exact one, bit for bit. The blocked join's
+  * `PersonSimilarity` kernel, which reads the fields as UTF-8 bytes from
+  * an `UnsafeRow` struct, must return what the String kernel returns,
+  * bound included, for every flag set and cutoff.
   */
 class PersonCutoffSpec extends AnyFunSuite {
 
@@ -107,5 +115,50 @@ class PersonCutoffSpec extends AnyFunSuite {
     val c = b.copy(gname = "zzz", lname = "qqq")
     assert(Similarity.personSimilarity(a, c, minScore = 80.0) === sm)
     assert(Similarity.personSimilarity(a, c) < sm)
+  }
+
+  private val toUnsafe = UnsafeProjection.create(Array.fill[DataType](5)(StringType))
+
+  /** `p` as the blocked join's person struct (gname, lname, dob, pob, prisoner). */
+  private def struct(p: Person): InternalRow = {
+    def u(s: String) = if (s == null) null else UTF8String.fromString(s)
+    toUnsafe(InternalRow(u(p.gname), u(p.lname), u(p.dob), u(p.pob), u(p.prisonerNumber))).copy()
+  }
+
+  test("the expression kernel equals the String kernel for every flag set and cutoff") {
+    val rnd = new Random(0x5c0f)
+    val pairs = Array.fill(600) { val a = person(rnd); (a, partner(rnd, a)) }
+    val rows = pairs.map { case (a, b) => (struct(a), struct(b)) }
+    val bits = java.lang.Double.doubleToRawLongBits _
+    var nearCutoff = 0
+    for {
+      nameOnly <- Seq(false, true)
+      simple <- Seq(false, true)
+      useDate <- Seq(true, false)
+      usePrisoner <- Seq(true, false)
+      usePob <- Seq(true, false)
+      i <- pairs.indices
+    } {
+      val (a, b) = pairs(i)
+      val (ra, rb) = rows(i)
+      val flags = PersonKernels.flags(useDate, usePrisoner, usePob, nameOnly, simple)
+      val dm: (String, String) => Double =
+        if (simple) Similarity.simpleDateMatcher else Similarity.dateSimilarity
+      def scala(m: Double) = Similarity.personSimilarity(a, b, useDate, usePrisoner,
+        usePob, nameOnly, dateMatcher = dm, minScore = m)
+      val s = scala(Double.NegativeInfinity)
+      // the fixed cutoffs, and the exact score and its two neighbours: a
+      // pair scoring one ulp above or below its cutoff
+      for (m <- cutoffs ++ Seq(s, math.nextUp(s), math.nextDown(s))) {
+        val got = PersonKernels.score(ra, rb, flags, m)
+        val want = scala(m)
+        def ctx = s"m=$m s=$s got=$got want=$want flags=$flags pair=($a, $b)"
+        if (bits(got) != bits(want)) fail(s"expression kernel differs: $ctx")
+        if ((got >= m) != (s >= m)) fail(s"cutoff side differs: $ctx")
+        if (s >= m && bits(got) != bits(s)) fail(s"kept score is not exact: $ctx")
+        if (m != s && math.abs(m - s) <= math.ulp(s)) nearCutoff += 1
+      }
+    }
+    assert(nearCutoff > 0)
   }
 }

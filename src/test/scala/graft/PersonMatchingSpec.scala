@@ -102,12 +102,12 @@ class PersonMatchingSpec extends SparkSpec {
     val rows = (1 to 200).map(i =>
       (i.toLong, rs(), rs(), rs(), rs(), rs(), rs(), rs(), rs(), rs(), rs()))
     val df = rows.toDF("id", "sg", "sl", "sd", "sp", "sn", "tg", "tl", "td", "tp", "tn")
-    import graft.linkage.PersonMatching
-    val scoreCol = PersonMatching.personSimilarityColumn(
-      PersonMatching.PersonCols(col("sg"), col("sl"), col("sd"), col("sp"), col("sn")),
-      PersonMatching.PersonCols(col("tg"), col("tl"), col("td"), col("tp"), col("tn")),
-      useDate = true, usePrisoner = true, usePob = true,
-      nameOnly = false, simpleDate = false)
+    import graft.expressions.{PersonColumns, PersonKernels}
+    val scoreCol = PersonColumns.personSimilarity(
+      struct(col("sg"), col("sl"), col("sd"), col("sp"), col("sn")),
+      struct(col("tg"), col("tl"), col("td"), col("tp"), col("tn")),
+      PersonKernels.flags(useDate = true, usePrisoner = true, usePob = true,
+        nameOnly = false, simpleDate = false), Double.NegativeInfinity)
     val got = df.select(col("id"), scoreCol.as("s")).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for ((id, sg, sl, sd, sp, sn, tg, tl, td, tp, tn) <- rows) {
@@ -178,18 +178,27 @@ class PersonMatchingSpec extends SparkSpec {
       "one pair sharing two buckets is one kept row and two counted emissions")
   }
 
-  test("expression scorer path agrees with the UDF path end to end") {
+  test("scoredPairs keeps exactly the pairs the Scala kernel scores at the cutoff, bit for bit") {
+    import graft.similarity.Similarity
     val src = persons.withColumnRenamed("id", "srcID")
     val trg = persons.withColumnRenamed("id", "trgID")
-    def run(expr: Boolean) = PersonMatching.scoredPairs(src, trg,
-      MatchConfig(minScore = 80.0, useExpressionScorer = expr), lit(true))
+    val byId = persons.collect().map(r => r.getLong(0) -> Similarity.Person(
+      r.getString(1), r.getString(2), r.getString(3), r.getString(4), r.getString(5))).toMap
+    val got = PersonMatching.scoredPairs(src, trg, MatchConfig(minScore = 80.0), lit(true))
       .collect()
       .map(r => (r.getAs[Long]("srcID"), r.getAs[Long]("trgID")) -> r.getAs[Double]("score"))
       .toMap
-    val udf = run(expr = false)
-    val col = run(expr = true)
-    assert(udf.keySet === col.keySet)
-    udf.foreach { case (k, v) => assert(math.abs(col(k) - v) < 1e-9, s"pair $k") }
+    // every pair the kernel scores >= 80 here shares a bucket, so the
+    // blocked join must keep exactly those
+    val want = (for {
+      (a, pa) <- byId; (b, pb) <- byId
+      s = Similarity.personSimilarity(pa, pb) if s >= 80.0
+    } yield (a, b) -> s).toMap
+    assert(got.keySet === want.keySet)
+    got.foreach { case (k, v) =>
+      assert(java.lang.Double.doubleToRawLongBits(v) ===
+        java.lang.Double.doubleToRawLongBits(want(k)), s"pair $k")
+    }
   }
 
   test("selfJoinMirror matches the plain path row for row") {

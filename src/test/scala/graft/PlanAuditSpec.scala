@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 /** Physical-plan audits: the properties that make these plans survive a
   * 100× scale-up, asserted so regressions fail loudly.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec
+    with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
@@ -262,5 +263,50 @@ class PlanAuditSpec extends SparkSpec {
     // "*(n)" prefixes mark whole-stage-codegen'd operators in the
     // compact plan rendering
     assert(p.contains("*(1)"), "date chain fell out of codegen")
+  }
+
+  test("q22 scores once per emission outside the join condition, with native bucket keys") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction,
+      LambdaFunction, RegExpReplace}
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.expressions.{BucketKeyPairs, PersonSimilarity}
+    // the scoring runs inside personMatching's checkpoint job, so the
+    // audit reads every executed plan of the query, not the final frame's
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("q22_person_match_self")(spark, sf).collect()
+      def nodes = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(p => collect(p) { case n => n })
+      def holding(pred: Expression => Boolean) =
+        nodes.filter(_.expressions.exists(_.find(pred).isDefined))
+      val deadline = System.nanoTime() + 60L * 1000000000L // listener events arrive async
+      while (holding(_.isInstanceOf[PersonSimilarity]).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      val scorers = nodes.flatMap(_.expressions.flatMap(_.collect { case e: PersonSimilarity => e }))
+      assert(scorers.size === 1, s"the scorer must be evaluated once per emission: $scorers")
+      val scoring = holding(_.isInstanceOf[PersonSimilarity])
+      assert(scoring.forall(_.isInstanceOf[ProjectExec]),
+        s"the scorer must sit in a projection: ${scoring.map(_.nodeName)}")
+      nodes.collect { case j: BaseJoinExec => j }.foreach { j =>
+        assert(j.condition.forall(_.find(_.isInstanceOf[PersonSimilarity]).isEmpty),
+          s"the scorer is pushed into a join condition: ${j.simpleString(200)}")
+      }
+      val bucketing = nodes.collect {
+        case g: GenerateExec if g.generator.find(_.isInstanceOf[BucketKeyPairs]).isDefined => g
+      }
+      assert(bucketing.nonEmpty, "no native bucket-key generator in the plan")
+      val interpreted = holding(e => e.isInstanceOf[RegExpReplace] ||
+        e.isInstanceOf[LambdaFunction] || e.isInstanceOf[HigherOrderFunction])
+      assert(interpreted.isEmpty,
+        s"the bucket stage holds a regex or lambda: ${interpreted.map(_.simpleString(200))}")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -28,44 +28,11 @@ object FuzzKernels {
     * `defaultProcess` scans per call. The blocked-join corpora are
     * twin-heavy (co-bucketed candidates frequently share the exact
     * name/birthplace cell), which is what makes this branch hot.
-    * Unequal inputs that are already in processed form (lowercase ASCII
-    * letters, digits and interior spaces: prisoner numbers, processed
-    * birthplaces) run the Indel ratio on their bytes, with no decode.
     * FuzzSpec pins the equal-input == 100.0 semantics over hostile
     * inputs (sentinels, whitespace-only, astral, empty).
     */
   def indelRatio(a: UTF8String, b: UTF8String): Double =
-    if (a.equals(b)) 100.0
-    else if (processedAscii(a) && processedAscii(b))
-      Fuzz.ratioOfUnequal(new AsciiChars(a), new AsciiChars(b))
-    else Fuzz.ratio(a.toString, b.toString)
-
-  /** Whether `Fuzz.defaultProcess` leaves `u` as it is and `u` is ASCII:
-    * every byte `a-z` or `0-9`, or a space other than the first or last.
-    * Such a string processes to itself, so its bytes are the processed
-    * chars and `ratio` needs no decode. The check is the ASCII case of
-    * `defaultProcess`'s own identity test (FuzzExpressionSpec).
-    */
-  private def processedAscii(u: UTF8String): Boolean = {
-    val n = u.numBytes
-    var i = 0
-    while (i < n) {
-      val c = u.getByte(i)
-      if (c == ' ') { if (i == 0 || i == n - 1) return false }
-      else if (!((c >= 'a' && c <= 'z') || (c >= '0' && c <= '9'))) return false
-      i += 1
-    }
-    true
-  }
-
-  /** The bytes of an ASCII string as its chars, without a decode. */
-  private final class AsciiChars(u: UTF8String) extends CharSequence {
-    override def length(): Int = u.numBytes
-    override def charAt(i: Int): Char = u.getByte(i).toChar
-    override def subSequence(start: Int, end: Int): CharSequence =
-      u.substring(start, end).toString
-    override def toString: String = u.toString
-  }
+    if (a.equals(b)) 100.0 else Fuzz.ratio(a.toString, b.toString)
   def tokenSetRatio(a: UTF8String, b: UTF8String): Double =
     if (a.equals(b)) 100.0 else Fuzz.tokenSetRatio(a.toString, b.toString)
   def jaro(a: UTF8String, b: UTF8String): Double =

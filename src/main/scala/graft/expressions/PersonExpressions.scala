@@ -147,9 +147,7 @@ case class BucketKeyPairs(left: Expression, right: Expression, idxChars: Int, le
   * (below it the bound is returned, as there; exact for a
   * `>= minScore` cut, `PersonCutoffSpec`). Dates are parsed from the
   * bytes; a string is decoded only for an Indel or token-set kernel whose
-  * two sides are comparable and not byte-equal, and for the Indel kernel
-  * only when a side is not already in processed ASCII form
-  * (`FuzzKernels.indelRatio`).
+  * two sides are comparable and not byte-equal.
   */
 object PersonKernels {
   final val UseDate = 1

@@ -266,14 +266,9 @@ object Fuzz {
   /** `fuzz.ratio` without preprocessing: 0.0–100.0. */
   def ratioRaw(a: String, b: String): Double = {
     if (a == b) return 100.0 // exact: Indel distance 0 (covers both-empty)
-    ratioOfUnequal(a, b)
-  }
-
-  /** [[ratioRaw]] past its equality check, for any char sequences. */
-  private[graft] def ratioOfUnequal(a: CharSequence, b: CharSequence): Double = {
     val lensum = a.length + b.length
     if (lensum == 0) 100.0
-    else 100.0 * (1.0 - (lensum - 2 * lcsLength(a, b)).toDouble / lensum)
+    else 100.0 * (1.0 - indelDistance(a, b).toDouble / lensum)
   }
 
   /** `fuzz.ratio(a, b, processor=utils.default_process)`.

@@ -29,28 +29,6 @@ class FuzzExpressionSpec extends SparkSpec {
     }
   }
 
-  test("the Indel ratio on UTF-8 bytes equals the String kernel on processed and raw shapes") {
-    import org.apache.spark.unsafe.types.UTF8String
-    import graft.expressions.FuzzKernels
-    // processed-form ASCII takes the byte path; leading/trailing spaces,
-    // uppercase, punctuation, tabs and non-ASCII must fall back to the
-    // decode and score exactly alike
-    val rnd = new scala.util.Random(0x1de1)
-    val alphabet = "abcz09     A.-\t\u00fc\u00df".toCharArray
-    val fixed = Seq("", " ", "a", "a ", " a", "a  b", "ab cd", "12345", "1234", "berlin",
-      "berlin hamburg", "Berlin", "berlin.", "m\u00fcller", "a\tb", "  ", "0", "00000000")
-    val strings = fixed ++ Seq.fill(4000)(
-      Array.fill(rnd.nextInt(10))(alphabet(rnd.nextInt(alphabet.length))).mkString)
-    for (i <- 0 until 20000) {
-      val (a, b) =
-        if (i < fixed.size * fixed.size) (fixed(i / fixed.size), fixed(i % fixed.size))
-        else (strings(rnd.nextInt(strings.size)), strings(rnd.nextInt(strings.size)))
-      val got = FuzzKernels.indelRatio(UTF8String.fromString(a), UTF8String.fromString(b))
-      assert(java.lang.Double.doubleToRawLongBits(got) ===
-        java.lang.Double.doubleToRawLongBits(Fuzz.ratio(a, b)), s"('$a', '$b')")
-    }
-  }
-
   test("null inputs yield null (expression null semantics)") {
     val row = Seq((null.asInstanceOf[String], "x")).toDF("a", "b")
       .select(FuzzColumns.indelRatio(col("a"), col("b"))).head()

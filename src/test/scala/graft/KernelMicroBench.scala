@@ -33,8 +33,8 @@ import graft.similarity.Similarity
   * blocked join's `PersonSimilarity` kernel on the two `UnsafeRow`
   * structs with the cutoff. Recorded on a 4-vCPU KVM guest (median of
   * 11 passes over 65,536 pairs, kept scores bit-identical across all
-  * four): twinFrac 0.05 → 805 / 452 / 1031 / 678 ns per pair, 0.5 →
-  * 869 / 662 / 1197 / 882 ns.
+  * four): twinFrac 0.05 → 1086 / 627 / 1468 / 1042 ns per pair, 0.5 →
+  * 540 / 418 / 911 / 713 ns.
   *
   *   sbt 'Test/runMain graft.KernelMicroBench buckets'
   *
@@ -42,7 +42,7 @@ import graft.similarity.Similarity
   * against the retired regex/lambda chain ([[RetiredBucketKeys]]),
   * evaluated as its bound optimized expression, the interpreted form it
   * ran in, over 32,768 one- to three-token names, after asserting equal
-  * keys for every name. Recorded as above: 1912 vs 174 ns per name.
+  * keys for every name. Recorded as above: 1753 vs 144 ns per name.
   */
 object KernelMicroBench {
   def main(args: Array[String]): Unit =

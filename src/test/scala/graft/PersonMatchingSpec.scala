@@ -178,7 +178,7 @@ class PersonMatchingSpec extends SparkSpec {
       "one pair sharing two buckets is one kept row and two counted emissions")
   }
 
-  test("scoredPairs keeps exactly the pairs the Scala kernel scores at the cutoff, bit for bit") {
+  test("scoredPairs keeps the kernel's pairs at the cutoff, bit for bit") {
     import graft.similarity.Similarity
     val src = persons.withColumnRenamed("id", "srcID")
     val trg = persons.withColumnRenamed("id", "trgID")

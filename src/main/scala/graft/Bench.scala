@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.core.ScaleKnob
 import graft.linkage.PersonMatching
+import graft.queries.Linkage
 
 /** Benchmark over the registered queries: per-query wall
   * seconds on one corpus, the growth of the similarity and dedup
@@ -104,12 +105,10 @@ object Bench {
     * not kill a multi-minute bench run with a NumberFormatException at
     * startup — warn, fall back to the default, clamp to `min`.
     *
-    * Deliberately NOT shared with the other two knob parsers: the three
-    * policies differ by blast radius. Bench knobs fall back quietly (a
-    * bad value must not cost a run); PersonMatching's override falls
-    * back with a warning (production path, must never throw); ScaleKnob
-    * fails loudly at query construction (a half-applied scale factor
-    * would silently corrupt a measurement).
+    * Deliberately NOT shared with ScaleKnob's parser: the two policies
+    * differ by blast radius. A bad bench knob must not cost a run, so it
+    * falls back; ScaleKnob fails loudly at query construction (a
+    * half-applied scale factor would silently corrupt a measurement).
     */
   private def cfgInt(key: String, default: Int, min: Int): Int = {
     val raw = cfg(key, default.toString)
@@ -402,16 +401,15 @@ object Bench {
                 Seq(0.25, 0.5, 1.0).foreach { frac =>
                   countedRun(fn(spark, sfDir), fracProps(frac): _*).foreach(q22Pairs(frac) = _)
                 }
-                // the cap bounding candidates on the REAL corpus: one run
-                // at the default cap, one at a tightened cap, candidate
-                // pairs and per-side drop counts from the same observe()
-                // metrics either way
+                // the cap bounding candidates on the REAL corpus: q22 built
+                // once at the default cap and once at a tightened cap,
+                // candidate pairs and per-side drop counts from the same
+                // observe() metrics either way
                 val defaultCap = PersonMatching.MatchConfig().maxBucketSize
                 val tightCap = cfgInt("SPARK_GRAFT_CAP_DEMO_BUCKET", 64, min = 1)
                 def countsAtCap(cap: Int): Option[(Int, Long, Long)] = try {
                   PersonMatching.lastDropObservationsBySide = Map.empty
-                  countedRun(fn(spark, sfDir),
-                    PersonMatching.MaxBucketSizeOverrideProp -> cap.toString).map { pairs =>
+                  countedRun(Linkage.q22(spark, sfDir, cap)).map { pairs =>
                     val drops = PersonMatching.lastDropObservationsBySide.values.toSeq
                       .flatMap(o => scala.util.Try(o.get("dropped_bucket_rows")).toOption)
                       .map(_.asInstanceOf[Number].longValue).sum

@@ -34,16 +34,7 @@ object Clustering {
       // O(1) memory. A component this size means blocking collapsed
       // (degenerate name distribution); the fallback is counted in the
       // `graft.cluster.oversized_components` accumulator, never silent.
-      maxComponentSize: Int = 10000,
-      // Connected-components algorithm: "label" = min-label propagation
-      // (O(component diameter) rounds, one join + one aggregate per
-      // round — the default, cheapest on blocked person graphs whose
-      // components are entity-sized), "star" = alternating
-      // large-star/small-star contraction (O(log n) rounds regardless
-      // of diameter, two grouped joins + a distinct per round — the
-      // opt-in for graphs where blocking may produce long chains). The
-      // two are label-equivalent (spec-pinned in ClusteringSpec).
-      ccAlgorithm: String = "label")
+      maxComponentSize: Int = 10000)
 
   /** E8 collision-augmented name shingles (reference
     * `add_collision_hashes` / `add_windowed_collision_hashes`,
@@ -217,8 +208,6 @@ object Clustering {
   /** Connected components by iterative min-label propagation. Converges
     * in O(component diameter) rounds — blocked person graphs have tiny
     * components, so the loop is short; `localCheckpoint` caps lineage.
-    * (A 100 TB general graph would swap in large-star/small-star; the
-    * interface stays the same.)
     *
     * Checkpoint lifecycle: each round's labels are checkpointed (the
     * plan would otherwise nest one join deeper per round), and the
@@ -291,18 +280,14 @@ object Clustering {
         "raise maxIter for graphs with diameter > maxIter")
     releaseCheckpoint(sym)
     lastCcRounds = iter
-    lastCcConverged = converged
     labels
   }
 
-  /** Round count and convergence of the LAST connected-components call
-    * on this JVM, either algorithm. Written by [[connectedComponents]] and
-    * [[connectedComponentsStar]]; never read by engine logic. Read by
-    * perfbench's `Observed` adapter (`linkage.cc_rounds`) and
-    * ClusteringSpec.
+  /** Round count of the LAST [[connectedComponents]] call on this JVM.
+    * Never read by engine logic. Read by perfbench's `Observed` adapter
+    * (`linkage.cc_rounds`) and ClusteringSpec.
     */
   @volatile private[graft] var lastCcRounds: Int = -1
-  @volatile private[graft] var lastCcConverged: Boolean = true
 
   /** The oversized-components accumulator of the LAST [[cluster]] call
     * on this JVM — its `.value` is meaningful once an action has run the
@@ -311,120 +296,6 @@ object Clustering {
     */
   @volatile private[graft] var lastOversizedAccumulator:
     org.apache.spark.util.LongAccumulator = _
-
-  /** Connected components by alternating large-star/small-star edge
-    * contraction — the O(log n)-round alternative to
-    * [[connectedComponents]]'s min-label propagation (public algorithm:
-    * Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * ACM SoCC 2014, the "two-phase" variant). Same contract: returns
-    * `(id, component)` with `component` = min id of the component, so
-    * the two are drop-in label-equivalent (spec-pinned, including on a
-    * randomized graph sweep, in ClusteringSpec).
-    *
-    * Round structure: large-star re-hangs every strictly-larger
-    * neighbor of each node u onto m(u) = min(Γ(u) ∪ {u}); small-star
-    * re-hangs the smaller neighbors (and u itself) onto the minimum of
-    * that smaller neighborhood. Each pair of passes roughly halves tree
-    * heights, so a diameter-d chain converges in O(log d) rounds where
-    * min-label propagation needs d — exactly the degenerate-chain case
-    * [[connectedComponents]]'s maxIter warning exists for. Per-round
-    * cost is higher (two grouped joins + a distinct + an exact set
-    * compare vs one join + one aggregate), which is why label
-    * propagation stays the default for blocked person graphs
-    * (entity-sized components, tiny diameters); opt in via
-    * `ClusterConfig(ccAlgorithm = "star")` for general graphs.
-    *
-    * Convergence: the canonical edge set is compared across rounds —
-    * equal count AND empty `except` (both O(log n)-many times, so the
-    * exact compare is affordable; a checksum could collide and stop
-    * early with silently-wrong labels, the failure mode the label
-    * loop's monotone label-sum argument rules out there). At the
-    * fixpoint the graph is a disjoint union of stars rooted at
-    * component minima, so labels read directly off the edges: member →
-    * its root, root/isolated vertex → itself. Non-convergence at
-    * maxIter is loud, same policy as the label loop. Bound honesty:
-    * Kiveris et al. PROVE O(log^2 n) rounds for this alternation; the
-    * O(log n) figure above is the observed/typical count (their
-    * experiments and ours — a 4096-vertex diameter-4095 chain
-    * converged in 13 rounds ≈ log2 4096 + 1). Default
-    * maxIter 35 covers the observed log-rounds for any graph up to
-    * 2^35 vertices with headroom, but since the proven bound is
-    * log^2, tripping it on an adversarial input is conceivable —
-    * raise maxIter in that case (the loop exits early at the fixpoint
-    * anyway, so a generous value costs nothing on normal graphs).
-    *
-    * Checkpoint lifecycle mirrors [[connectedComponents]]: each round's
-    * edge set (and the intermediate large-star set, which the
-    * small-star pass reads twice) is checkpointed; the previous round's
-    * blocks are released as soon as the compare that reads them
-    * finishes, so residency stays O(|E|), not O(rounds × |E|).
-    */
-  def connectedComponentsStar(vertices: DataFrame, edges: DataFrame, maxIter: Int = 35): DataFrame = {
-    // canonicalize: undirected a < b, self-loop-free, deduplicated —
-    // the loop body preserves this invariant (both star passes emit
-    // (min, other) pairs), so only the input pays a normalization pass
-    var cur = edges
-      .select(least(col("a"), col("b")).as("a"), greatest(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .trackedCheckpoint()
-    var curCount = cur.count()
-    var converged = curCount == 0L // no edges: every vertex is its own star
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val sym = cur.select(col("a").as("u"), col("b").as("v"))
-        .union(cur.select(col("b").as("u"), col("a").as("v")))
-      // large-star: every neighbor v > u re-hangs onto m = min(Γ(u) ∪ {u});
-      // m ≤ u < v keeps emitted pairs canonical with no re-sort
-      val mins = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = sym.filter(col("v") > col("u"))
-        .join(mins, "u")
-        .filter(col("m") =!= col("v"))
-        .select(col("m").as("a"), col("v").as("b"))
-        .distinct()
-        .trackedCheckpoint()
-      // small-star over the large-star output: neighbors v < u (plus u
-      // itself) re-hang onto m = min of those neighbors; m ≤ v < u
-      val sym2 = large.select(col("a").as("u"), col("b").as("v"))
-        .union(large.select(col("b").as("u"), col("a").as("v")))
-      val smaller = sym2.filter(col("v") < col("u"))
-      val mins2 = smaller.groupBy("u").agg(min(col("v")).as("m"))
-      val next = smaller.join(mins2, "u")
-        .filter(col("m") =!= col("v"))
-        .select(col("m").as("a"), col("v").as("b"))
-        .union(mins2.select(col("m").as("a"), col("u").as("b")))
-        .distinct()
-        .trackedCheckpoint()
-      // next is materialized (localCheckpoint is eager); the large-star
-      // intermediate is dead — release before the compare runs
-      releaseCheckpoint(large)
-      val nextCount = next.count()
-      // equal-cardinality distinct sets with next ⊆ cur are equal — one
-      // count (already needed) + one anti-join, exact
-      converged = nextCount == curCount && next.except(cur).isEmpty
-      releaseCheckpoint(cur)
-      cur = next
-      curCount = nextCount
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] connectedComponentsStar did NOT converge in $maxIter " +
-        "rounds - returned labels are mid-contraction and may split true components; " +
-        "star contraction needs O(log n) rounds, so this input is far past design scale")
-    // at the fixpoint every non-root appears as `b` in exactly one star
-    // edge whose `a` is the component min; min() keeps the unconverged
-    // (loudly flagged) case deterministic rather than join-multiplied
-    val memberRoot = cur.groupBy(col("b").as("id")).agg(min(col("a")).as("cmin"))
-    val labels = vertices.select(col("id"))
-      .join(memberRoot, Seq("id"), "left")
-      .select(col("id"), coalesce(col("cmin"), col("id")).as("component"))
-      .trackedCheckpoint()
-    releaseCheckpoint(cur)
-    lastCcRounds = iter
-    lastCcConverged = converged
-    labels
-  }
 
   /** Release the persisted blocks behind a `localCheckpoint`'ed frame
     * (no-op for any other plan). Delegates to
@@ -561,18 +432,12 @@ object Clustering {
       persons: DataFrame,
       cfg: ClusterConfig = ClusterConfig(),
       knownKeyCol: Option[String] = None): DataFrame = {
-    // validate BEFORE any checkpointing work so a bad config cannot
-    // leave tracked blocks behind
-    require(cfg.ccAlgorithm == "label" || cfg.ccAlgorithm == "star",
-      s"ccAlgorithm ${cfg.ccAlgorithm} (expected label|star)")
     val edges = scoredEdges(persons, cfg).select("a", "b")
     val allEdges = knownKeyCol match {
       case Some(k) => edges.union(knownClusterEdges(persons, k)).distinct()
       case None    => edges
     }
-    val comps =
-      if (cfg.ccAlgorithm == "star") connectedComponentsStar(persons.select("id"), allEdges)
-      else connectedComponents(persons.select("id"), allEdges)
+    val comps = connectedComponents(persons.select("id"), allEdges)
     val withComp = persons.join(comps, "id")
 
     val cfgB = cfg

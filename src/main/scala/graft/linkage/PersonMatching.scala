@@ -74,7 +74,7 @@ object PersonMatching {
       val e = df.select(col(id), personStruct(df, cfg).as(person),
         inline(PersonColumns.bucketKeyPairs(col(cfg.gnameCol), col(cfg.lnameCol),
           cfg.idxChars, cfg.lenUnits)))
-      capBuckets(e, id, effectiveMaxBucketSize(cfg))
+      capBuckets(e, id, cfg.maxBucketSize)
     }
     val s = exploded(src, "srcID", "__srcP")
     val t = exploded(trg, "trgID", "__trgP")
@@ -100,30 +100,6 @@ object PersonMatching {
   /** Opt-in switch for the candidate counter in [[candidatePairs]]. */
   private[graft] val CountCandidatesProp = "graft.match.countCandidates"
 
-  /** Bench-only override of `MatchConfig.maxBucketSize` — lets the
-    * scaling pass tighten the hot-bucket cap on the REAL corpus (untimed
-    * demo runs) without touching any query's production config. Never
-    * set outside `graft.Bench`; Verify's correctness runs see the config
-    * value untouched.
-    */
-  private[graft] val MaxBucketSizeOverrideProp = "graft.match.maxBucketSize"
-
-  /** The override parses defensively: this runs on every production
-    * candidate build, and a malformed or leaked property value must not
-    * throw (or silently change matching semantics) in a non-bench caller
-    * sharing the JVM — warn and fall back to the config value instead.
-    */
-  private def effectiveMaxBucketSize(cfg: MatchConfig): Int =
-    sys.props.get(MaxBucketSizeOverrideProp) match {
-      case None => cfg.maxBucketSize
-      case Some(raw) =>
-        scala.util.Try(raw.trim.toInt).toOption.filter(_ > 0).getOrElse {
-          System.err.println(s"[graft] ignoring invalid $MaxBucketSizeOverrideProp='$raw' " +
-            s"(not a positive integer); using MatchConfig.maxBucketSize=${cfg.maxBucketSize}")
-          cfg.maxBucketSize
-        }
-    }
-
   /** Most recent candidate counter (bench/test observability; set once
     * per [[candidatePairs]] call when [[CountCandidatesProp]] is "1").
     * It counts bucket-join emissions that pass the pair predicate, which
@@ -134,16 +110,11 @@ object PersonMatching {
     */
   @volatile private[graft] var lastCandidateObservation: org.apache.spark.sql.Observation = _
 
-  /** Most recent drop counter (test observability; one per capped side).
-    * `Observation.get` blocks until the first action over the capped plan
-    * completes, then returns `Map("dropped_bucket_rows" -> count)`.
-    */
-  @volatile private[graft] var lastDropObservation: org.apache.spark.sql.Observation = _
-
   /** Drop counters of the most recent [[candidatePairs]] call, keyed by
     * side ("srcID"/"trgID") — the bench's cap-engagement demo sums both
-    * sides. [[lastDropObservation]] keeps its last-write-wins contract
-    * for the single-side spec assertions.
+    * sides. `Observation.get` blocks until the first action over the
+    * capped plan completes, then returns
+    * `Map("dropped_bucket_rows" -> count)`.
     */
   @volatile private[graft] var lastDropObservationsBySide:
       Map[String, org.apache.spark.sql.Observation] = Map.empty
@@ -161,12 +132,12 @@ object PersonMatching {
     * merged exactly once per completed action, so the count is exact
     * under task retries — an accumulator in a filter would over-report.
     * Default 10000 (10^8 pairs/bucket ceiling) is far above any
-    * non-degenerate bucket.
+    * non-degenerate bucket. The cap comes only from
+    * `MatchConfig.maxBucketSize`; no property or global overrides it.
     */
   private def capBuckets(exploded: DataFrame, id: String, maxBucketSize: Int): DataFrame = {
     if (maxBucketSize <= 0) return exploded
     val obs = org.apache.spark.sql.Observation(s"graft.match.dropped.$id")
-    lastDropObservation = obs
     lastDropObservationsBySide = lastDropObservationsBySide + (id -> obs)
     val w = Window.partitionBy(col("fb"), col("lb"))
       .orderBy(hash(col(id)), col(id))
@@ -208,7 +179,8 @@ object PersonMatching {
       nameOnly: Boolean = false,
       allowDuplicates: Boolean = true,
       useSimpleDateMatcher: Boolean = false,
-      // per-bucket membership ceiling; ≤0 disables (see capBuckets)
+      // per-bucket membership ceiling, the cap's only source; ≤0
+      // disables (see capBuckets)
       maxBucketSize: Int = 10000,
       // src and trg are the SAME dataset: score each unordered pair once
       // (srcID <= trgID) and mirror — valid because every default kernel

@@ -132,8 +132,9 @@ class BenchSmokeSpec extends SparkSpec {
       assert(math.abs(got - expected) < math.max(0.002, 0.01 * expected),
         s"full normalization $got != full_sec $fullSec * 1e6 / pairs $fullPairs = $expected")
       // cap_demo: the default cap, then the tightened one, counted on the
-      // same full corpus — a tighter cap can only drop bucket
-      // memberships, so it never forms more candidate pairs
+      // same full corpus. A cap of 2 must bite on this corpus: it drops
+      // memberships and forms strictly fewer candidates, so a cap that
+      // never reaches the plan fails here instead of passing silently
       val capRe = """\{"max_bucket_size":(\d+),"candidate_pairs":(\d+),"dropped_bucket_rows":(\d+)\}""".r
       val caps = capRe.findAllMatchIn(res.full).map(m =>
         (m.group(1).toInt, m.group(2).toLong, m.group(3).toLong)).toList
@@ -142,8 +143,9 @@ class BenchSmokeSpec extends SparkSpec {
       val (defaultCounts, tightCounts) = (caps(0), caps(1))
       assert(defaultCounts._2 === fullPairs,
         s"cap_demo at the default cap must count the scaling pass's full point: $caps")
-      assert(tightCounts._2 <= defaultCounts._2, s"tight cap formed more candidates: $caps")
-      assert(caps.forall(_._3 >= 0), s"negative drop count: $caps")
+      assert(tightCounts._2 < defaultCounts._2, s"tight cap did not cut candidates: $caps")
+      assert(tightCounts._3 > 0, s"tight cap dropped no bucket rows: $caps")
+      assert(defaultCounts._3 >= 0, s"negative drop count: $caps")
     }
   }
 

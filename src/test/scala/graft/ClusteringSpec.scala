@@ -267,12 +267,10 @@ class ClusteringSpec extends SparkSpec {
     assert(!errBuf2.toString.contains("did NOT converge"))
   }
 
-  test("star contraction converges in O(log n) rounds where label propagation trips maxIter") {
+  test("a 300-chain trips label propagation's maxIter loudly") {
     // a 300-vertex path has diameter 299: min-label propagation at the
-    // default maxIter=25 must stop short (loudly — the existing policy)
-    // while large-star/small-star converges well inside its default
-    // budget in ~log rounds — the exact degenerate-chain case the star
-    // variant exists for
+    // default maxIter=25 must stop short, and say so on stderr — silent
+    // mid-propagation labels would split a true component
     val n = 300L
     val vertices = spark.range(0, n).toDF("id")
     val edges = spark.range(0, n - 1).select(col("id").as("a"), (col("id") + 1).as("b"))
@@ -286,97 +284,51 @@ class ClusteringSpec extends SparkSpec {
       } finally System.setErr(prevErr)
     assert(labelComps.length > 1, "25 min-label rounds cannot converge a 300-chain")
     assert(errBuf.toString.contains("did NOT converge"))
-    val errBuf2 = new java.io.ByteArrayOutputStream()
-    val starLabels =
-      try {
-        System.setErr(new java.io.PrintStream(errBuf2, true))
-        Clustering.connectedComponentsStar(vertices, edges)
-          .collect().map(r => r.getLong(0) -> r.getLong(1))
-      } finally System.setErr(prevErr)
-    assert(!errBuf2.toString.contains("did NOT converge"), "star must converge quietly")
-    assert(Clustering.lastCcConverged)
-    assert(Clustering.lastCcRounds <= 12,
-      s"star contraction should need ~log2(300)≈9 rounds, took ${Clustering.lastCcRounds}")
-    assert(starLabels.length === n)
-    assert(starLabels.map(_._2).distinct === Array(0L), "one chain = one component rooted at 0")
+    assert(Clustering.lastCcRounds === 25)
   }
 
-  test("star contraction is label-equivalent to min-label propagation") {
-    // mixed deterministic graph: two components, an isolated vertex,
-    // duplicate / reversed / self-loop edges — both algorithms must
-    // emit the identical (id -> min-id-of-component) map
-    val vertices = Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L).toDF("id")
-    val edges = Seq(
-      (2L, 1L), (2L, 3L), (3L, 2L), (4L, 4L), // component {1,2,3}; self-loop noise
-      (5L, 6L), (6L, 7L), (5L, 7L), (5L, 6L)) // component {5,6,7}; 4 and 8 isolated
-      .toDF("a", "b")
+  /** Independent oracle: union-find over the edge list, every vertex
+    * labelled with the minimum id of its component.
+    */
+  private def unionFindLabels(vertices: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = collection.mutable.Map(vertices.map(v => v -> v): _*)
+    def find(v: Long): Long = {
+      val p = parent(v)
+      if (p == v) v else { val r = find(p); parent(v) = r; r }
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      // the smaller root wins, so every root is its component's minimum
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    vertices.map(v => v -> find(v)).toMap
+  }
+
+  test("label propagation agrees with a union-find oracle") {
     def labelsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val byLabel = labelsOf(Clustering.connectedComponents(vertices, edges))
-    val byStar = labelsOf(Clustering.connectedComponentsStar(vertices, edges))
-    assert(byStar === byLabel)
-    assert(byStar === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
+    // mixed deterministic graph: two components, isolated vertices,
+    // duplicate / reversed / self-loop edges
+    val fixed = Seq((2L, 1L), (2L, 3L), (3L, 2L), (4L, 4L), // {1,2,3}; self-loop noise
+      (5L, 6L), (6L, 7L), (5L, 7L), (5L, 6L)) // {5,6,7}; 4 and 8 isolated
+    val fixedLabels = labelsOf(Clustering.connectedComponents(
+      (1L to 8L).toDF("id"), fixed.toDF("a", "b")))
+    assert(fixedLabels === unionFindLabels(1L to 8L, fixed))
+    assert(fixedLabels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L, 7L -> 5L, 8L -> 8L))
     // randomized sweep: seeded Erdős–Rényi-ish graphs of varied density
-    // (sparse fragments through near-connected) — equivalence must hold
-    // on shapes nobody hand-picked
+    // (sparse fragments through near-connected), run with maxIter = nv
+    // so no diameter can stop propagation short
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 4) {
       val nv = 40 + trial * 15
       val ne = nv * trial // density rises with the trial index
-      val vs = spark.range(0, nv.toLong).toDF("id")
       val es = Seq.fill(ne)((rnd.nextInt(nv).toLong, rnd.nextInt(nv).toLong))
-        .toDF("a", "b").filter(col("a") =!= col("b"))
-      val l = labelsOf(Clustering.connectedComponents(vs, es, maxIter = nv))
-      val s = labelsOf(Clustering.connectedComponentsStar(vs, es))
-      assert(s === l, s"trial $trial (nv=$nv ne=$ne): star and label propagation disagree")
-    }
-  }
-
-  test("star contraction: empty graph, no edges, and checkpoint release") {
-    // empty vertex set: no NPE, empty result
-    assert(Clustering.connectedComponentsStar(
-      Seq.empty[Long].toDF("id"), Seq.empty[(Long, Long)].toDF("a", "b")).count() === 0L)
-    // vertices with zero edges: everyone is their own component, zero rounds
-    val lone = Clustering.connectedComponentsStar(
-      Seq(3L, 9L).toDF("id"), Seq.empty[(Long, Long)].toDF("a", "b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lone === Map(3L -> 3L, 9L -> 9L))
-    assert(Clustering.lastCcRounds === 0)
-    // residency: same contract as the label loop — after the call only
-    // the returned labels checkpoint stays resident
-    graft.core.SessionHygiene.releaseLeftovers(spark)
-    val vertices = (0L to 11L).toDF("id")
-    val edges = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
-    val labels = Clustering.connectedComponentsStar(vertices, edges)
-    assert(labels.collect().map(_.getLong(1)).toSet === Set(0L))
-    val resident = spark.sparkContext.getPersistentRDDs
-    assert(resident.size === 1,
-      s"expected only the final labels checkpoint, found ${resident.size}")
-    assert(labels.count() === 12L)
-    graft.core.SessionHygiene.releaseLeftovers(spark)
-  }
-
-  test("cluster() with ccAlgorithm=star matches the default end-to-end") {
-    // full-pipeline equivalence, including the adversarial 400-identical
-    // corpus (one hot component) — cluster assignments must partition
-    // identically under either component algorithm
-    def partitionOf(df: org.apache.spark.sql.DataFrame): Set[Set[Long]] =
-      df.collect().map(r => r.getAs[String]("cluster_id") -> r.getAs[Long]("id"))
-        .groupBy(_._1).values.map(_.map(_._2).toSet).toSet
-    val base = ClusterConfig(cutoff = 85.0)
-    assert(partitionOf(Clustering.cluster(persons, base.copy(ccAlgorithm = "star")))
-      === partitionOf(Clustering.cluster(persons, base)))
-    val degenerate = spark.range(1, 401)
-      .select(col("id"),
-        lit("maria").as("strGName_processed"), lit("kovac").as("strLName_processed"),
-        lit("19210505").as("strDoB_processed"), lit("brno").as("strPoB_processed"),
-        lit(null).cast("string").as("prisoner_number"))
-    val cfg = ClusterConfig(cutoff = 90.0, maxComponentSize = 100)
-    assert(partitionOf(Clustering.cluster(degenerate, cfg.copy(ccAlgorithm = "star")))
-      === partitionOf(Clustering.cluster(degenerate, cfg)))
-    intercept[IllegalArgumentException] {
-      Clustering.cluster(persons, base.copy(ccAlgorithm = "bogus")).collect()
+        .filter { case (a, b) => a != b }
+      val l = labelsOf(Clustering.connectedComponents(
+        spark.range(0, nv.toLong).toDF("id"), es.toDF("a", "b"), maxIter = nv))
+      assert(l === unionFindLabels(0L until nv.toLong, es),
+        s"trial $trial (nv=$nv ne=$ne): label propagation disagrees with union-find")
     }
   }
 

@@ -195,4 +195,23 @@ class ScaleKnobSpec extends SparkSpec {
       assert(ScaleKnob.sample(spark.range(0, 2000).toDF("id"), "id").count() === 2L)
     }
   }
+
+  test("q61 keeps the base's parts in every replicated shard") {
+    // q61 keeps every fourth part. The filter must key on the on-disk
+    // part key, before replication remaps ids to id*n + k: a filter on
+    // the remapped id keeps a different subset in each shard. Source ids
+    // are 2*pid (+1 for the variant), so (srcID / 2) / n is the base
+    // part and (srcID / 2) % n the shard
+    val q61 = SparkEntry.queries("q61_dedupe_targets")
+    def partIds(): Seq[Long] =
+      q61(spark, sf).select("srcID").collect().map(_.getAs[Number](0).longValue / 2).toSeq
+    val base = partIds().toSet
+    assert(base.nonEmpty)
+    withProp(ScaleKnob.ReplicateProp, "3") {
+      val byShard = partIds().groupBy(_ % 3)
+      for (k <- 0 until 3)
+        assert(byShard.getOrElse(k, Nil).map(_ / 3).toSet === base,
+          s"shard $k does not hold the base q61's parts")
+    }
+  }
 }

@@ -3,7 +3,7 @@ package graft.consensus
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
-import graft.core.Sentinels
+import graft.core.{Parallelism, Sentinels}
 import graft.core.SessionHygiene.TrackedCheckpoint
 
 /** Deduplication job configuration (reference `ENC_Deduplicater` builder
@@ -38,12 +38,17 @@ final case class DedupSpec(
 /** N transcriptions of one document → one consensus row per document
   * (reference `ENC_Deduplicater.run`, `enc/deduplication.py:244-296`).
   *
-  * Spark shape: one `groupByKey(document_id).mapGroups` pass computes the
-  * per-column votes, the ambiguity bookkeeping AND the QA propagation that
-  * the reference does via a join-back — one shuffle on the document id
-  * instead of three frame passes. Groups are transcription counts (≤ ~10
-  * rows), so buffering a group is bounded regardless of table size; at
-  * 100 TB the job scales with the number of documents per partition.
+  * Spark shape: one `groupBy(document_id).as[String, Row].mapGroups` pass
+  * computes the per-column votes, the ambiguity bookkeeping AND the QA
+  * propagation that the reference does via a join-back — one shuffle on
+  * the document id instead of three frame passes. That shuffle is
+  * [[Parallelism.staged]] at the session width: the vote is CPU-bound
+  * while its input is a few MB, which AQE would otherwise coalesce into
+  * one serial task. Grouping on the column, not a key function, lets the
+  * vote reuse that exchange (`groupByKey`'s appended key would force a
+  * second one). Groups are transcription counts (≤ ~10 rows), so
+  * buffering a group is bounded regardless of table size; at 100 TB the
+  * job scales with the number of documents per partition.
   * Raw rows are preserved with `deleted=true` and the consensus verdicts
   * (`is_ambiguous`, `ambiguous_columns`, `object_id`) joined back on the
   * id — the reference's index `.loc` copy-down re-expressed as an
@@ -184,7 +189,6 @@ object EncDeduplicater {
     // --- consensus pass --------------------------------------------------
     val cols = df.columns
     val idx = cols.zipWithIndex.toMap
-    val idIdx = idx(spec.idCol)
     val ridIdx = idx("row_id")
     val matchedArr: Array[(String, Int, ColMatcher, Int)] = // (col, colIdx, matcher, qaIdx)
       spec.matchedCols.map(c => (c, idx(c), spec.matcherFor(c), idx(qaMap(c)))).toArray
@@ -204,8 +208,8 @@ object EncDeduplicater {
           StructField("object_id", StringType)) ++
         metaArr.map { case (c, _) => StructField(c, StringType) })
 
-    val consensus = df
-      .groupByKey(r => r.getString(idIdx))(Encoders.STRING)
+    val consensus = Parallelism.staged(df, col(spec.idCol))
+      .groupBy(col(spec.idCol)).as[String, Row](Encoders.STRING, Encoders.row(df.schema))
       .mapGroups { (id, it) =>
         // Transcription order is load-bearing (tie-to-last vote, metadata
         // first-row copy) — restore it from the explicit row id.

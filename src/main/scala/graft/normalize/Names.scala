@@ -2,7 +2,6 @@ package graft.normalize
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.SessionHygiene.TrackedCheckpoint
 
 /** Last/first-name normalization (SURVEY F3–F14; reference
   * `src/aroa_etl/attribute_processing/column_processing.py:48-342`).
@@ -10,28 +9,32 @@ import graft.core.SessionHygiene.TrackedCheckpoint
   * Each normalizer appends its derived columns (`<name>_cleaned_i`,
   * `<name>_qa`, `<name>_data_source`, …) to the input frame — the
   * reference's per-family derived-frame + index-concat becomes plain
-  * same-row column expressions (no join, no shuffle). The only extra job
-  * is one `max(size(split))` aggregation per family because the number of
-  * numbered output columns is data-dependent (two-pass, like unpack).
+  * same-row column expressions (no join, no shuffle). The number of
+  * numbered output columns is data-dependent (two-pass, like unpack), so
+  * each name family is a [[Family]]: [[Families.normalize]] pins every
+  * family's kernel at once and reads every width in one aggregation, so
+  * `Processing` pays one pin and one arity job for all its families.
   */
 object Names {
   import Clean._
   import PyText._
 
-  private[normalize] def maxParts(df: DataFrame, arr: Column): Int = {
-    // max() over an EMPTY (or all-null) frame aggregates to SQL NULL;
-    // getInt would NPE — an empty input normalizes to an empty output
-    // with the k=1 column family, not a crash
-    val row = df.agg(max(size(arr))).head()
-    if (row.isNullAt(0)) 1 else math.max(row.getInt(0), 1)
-  }
+  /** Length-cap QA (F10) on all `k` split parts but the last. */
+  private def lenQa(parts: Column, qa0: Column, k: Int): Column =
+    (0 until k - 1).map(i => coalesce(length(get(parts, lit(i))) > 49, lit(false)))
+      .foldLeft(qa0)(_ || _)
 
-  /** Reference naming modes (column_processing.py:180-222), shared by
-    * the fused and column-spec paths.
+  /** The last-name family over a pinned kernel value `kv` holding
+    * `parts`/`birth` (`qa0` reads its pre-split QA). Everything after the
+    * pre-split chain (F10 length-cap QA, F11 digit strip, F12/F14
+    * positional post-processing) is shared verbatim by the fused path
+    * and the column spec, so the fused-vs-spec differential
+    * (NamesFusedSpec) isolates exactly the chain that changed.
     */
-  private def lastNameNaming(
-      outName: String, birthNameInput: Boolean, alias: Boolean,
-      alternativeSpelling: Boolean): (String, Int => String, String) = {
+  private def lastNameFamily(
+      kernel: Column, qa0: Column => Column, dataSource: String, outName: String,
+      birthNameInput: Boolean, alias: Boolean, alternativeSpelling: Boolean): Family = {
+    // reference naming modes (column_processing.py:180-222)
     val colName =
       if (birthNameInput) "birth_name"
       else if (alias) s"${outName}_alias"
@@ -41,53 +44,41 @@ object Names {
       else s"${colName}_cleaned_$i"
     val qaName =
       if (alternativeSpelling) s"alternative_spellings_of_${colName}_qa" else s"${colName}_qa"
-    (colName, cleanedName, qaName)
+    val emitBirth = !birthNameInput && !alternativeSpelling
+    Family(kernel, kv => size(kv("parts")), { (kv, k) =>
+      // digit strip (F11) and trim
+      val cleaned = (0 until k).map(i =>
+        cleanedName(i) -> pyStrip(regexp_replace(get(kv("parts"), lit(i)), "[0-9]", "")))
+      val window = cleaned ++
+        (if (emitBirth) Seq(s"${colName}_birth_name_extracted" -> pyStrip(kv("birth"))) else Nil)
+      // F14: female last-name endings — positional cascade over the
+      // columns at positions 1..4 (split cols then the extracted birth
+      // name, exactly the reference's iloc[:, 1:5] window); each reads
+      // its already-extended predecessor
+      val cascaded = window.slice(1, 5).scanLeft(window.head) { case ((_, prev), (name, c)) =>
+        name -> when(c.isin("Ova", "Ene", "Aite", "Ite", "Yte"), concat(prev, lower(c))).otherwise(c)
+      }
+      cascaded ++ window.drop(5) ++ Seq(
+        qaName -> lenQa(kv("parts"), qa0(kv), k),
+        s"${colName}_data_source" -> lit(dataSource))
+    })
   }
 
-  /** Everything after the pre-split chain (F10 length-cap QA, F11 digit
-    * strip, F12/F14 positional post-processing) — shared verbatim by the
-    * fused path and the column spec, so the fused-vs-spec differential
-    * (NamesFusedSpec) isolates exactly the chain that changed. Expects
-    * `__parts`/`__birth`/`__qa0` on `df1`.
-    */
-  private def lastNamePost(
-      df1: DataFrame, colName: String, dataSource: String,
-      cleanedName: Int => String, qaName: String, emitBirth: Boolean): DataFrame = {
-    val k = maxParts(df1, col("__parts"))
-
-    // length-cap QA on all split columns but the last (F10), then digit
-    // strip (F11) and trim
-    val splitCols = (0 until k).map(i => get(col("__parts"), lit(i)))
-    val lenQa = splitCols.dropRight(1)
-      .map(sc => coalesce(length(sc) > 49, lit(false)))
-      .foldLeft(col("__qa0"))(_ || _)
-
-    var out = df1
-    val cleanedNames = (0 until k).map(cleanedName)
-    for ((name, i) <- cleanedNames.zipWithIndex)
-      out = out.withColumn(name,
-        pyStrip(regexp_replace(get(col("__parts"), lit(i)), "[0-9]", "")))
-    if (emitBirth)
-      out = out.withColumn(s"${colName}_birth_name_extracted", pyStrip(col("__birth")))
-    out = out
-      .withColumn(qaName, lenQa)
-      .withColumn(s"${colName}_data_source", lit(dataSource))
-      .drop("__parts", "__birth", "__qa0")
-
-    // F14: female last-name endings — positional cascade over the columns
-    // at positions 1..4 of the derived frame (split cols then the
-    // extracted birth name, exactly the reference's iloc[:, 1:5] window)
-    val window = (cleanedNames ++
-      (if (emitBirth) Seq(s"${colName}_birth_name_extracted") else Nil))
-    val positional = window.drop(1).take(4)
-    var prev: Column = col(window.head)
-    for (name <- positional) {
-      val ext = when(col(name).isin("Ova", "Ene", "Aite", "Ite", "Yte"),
-        concat(prev, lower(col(name)))).otherwise(col(name))
-      out = out.withColumn(name, ext)
-      prev = col(name)
-    }
-    out
+  /** The `normalize_last_name` family of `input` (see [[normalizeLastName]]). */
+  private[normalize] def lastName(
+      input: Column,
+      dataSource: String = "crowd_sourcing",
+      outName: String = "last_name",
+      birthNameInput: Boolean = false,
+      alias: Boolean = false,
+      alternativeSpelling: Boolean = false,
+      flagNoblePrefix: Boolean = true): Family = {
+    val kernel = udf((s: String) => NamesKernel.lastName(s, birthNameInput))
+    // the noble flag joins the QA fold in COLUMN space because it is
+    // 3-valued (NULL on a null chain)
+    lastNameFamily(kernel(input.cast("string")),
+      kv => kv("qab") || (if (flagNoblePrefix) kv("noble") else lit(false)),
+      dataSource, outName, birthNameInput, alias, alternativeSpelling)
   }
 
   /** `normalize_last_name` (column_processing.py:48-227). Appends:
@@ -107,27 +98,9 @@ object Names {
       birthNameInput: Boolean = false,
       alias: Boolean = false,
       alternativeSpelling: Boolean = false,
-      flagNoblePrefix: Boolean = true): DataFrame = {
-    val (colName, cleanedName, qaName) =
-      lastNameNaming(outName, birthNameInput, alias, alternativeSpelling)
-    val emitBirth = !birthNameInput && !alternativeSpelling
-    val bni = birthNameInput
-    val kernel = org.apache.spark.sql.functions.udf {
-      (s: String) => NamesKernel.lastName(s, bni)
-    }.asNondeterministic()
-    // same two-consumer materialization as the column spec (arity
-    // aggregation + output select); the noble flag joins the QA fold in
-    // COLUMN space because it is 3-valued (NULL on a null chain)
-    val df1 = input
-      .withColumn("__nm", kernel(col(lastName).cast("string")))
-      .trackedCheckpoint()
-      .withColumn("__parts", col("__nm")("parts"))
-      .withColumn("__birth", col("__nm")("birth"))
-      .withColumn("__qa0", col("__nm")("qab") ||
-        (if (flagNoblePrefix) col("__nm")("noble") else lit(false)))
-      .drop("__nm")
-    lastNamePost(df1, colName, dataSource, cleanedName, qaName, emitBirth)
-  }
+      flagNoblePrefix: Boolean = true): DataFrame =
+    Families.normalize(input, Seq(this.lastName(col(lastName), dataSource, outName,
+      birthNameInput, alias, alternativeSpelling, flagNoblePrefix)))
 
   /** The original column-expression chain — the fused kernel's SPEC
     * (see [[DatesKernel]]; the post-split logic is shared, so the
@@ -142,10 +115,6 @@ object Names {
       alias: Boolean = false,
       alternativeSpelling: Boolean = false,
       flagNoblePrefix: Boolean = true): DataFrame = {
-    val (colName, cleanedName, qaName) =
-      lastNameNaming(outName, birthNameInput, alias, alternativeSpelling)
-    val emitBirth = !birthNameInput && !alternativeSpelling
-
     // ONE divergence gate per row, on the RAW input (the cover is
     // case-closed and every chain insertion is ASCII, so no step can
     // turn a fast-path row divergent — Regexes.DivergenceCover scaladoc).
@@ -204,47 +173,51 @@ object Names {
     if (!birthNameInput) qa = qa || birthName.rlike(Regexes.Qa)
     qa = qa || nobleQa
 
-    val parts = split(pyTitleUdf(c), ";", 5)
-    // localCheckpoint: the arity aggregation below and the final select
-    // are two consumers of the full regex chain — materialize it once.
-    // The three derived values are packed into ONE struct column first:
-    // as separate withColumns each would embed its own copy of the dual
+    // the three derived values are packed into ONE struct kernel: as
+    // separate columns each would embed its own copy of the dual
     // exact/fast chain (~30 multi-KB regex instances serialized per
     // task instead of ~10)
-    val df1 = input
-      .withColumn("__nm", struct(parts.as("parts"), birthName.as("birth"), qa.as("qa0")))
-      .trackedCheckpoint()
-      .withColumn("__parts", col("__nm.parts"))
-      .withColumn("__birth", col("__nm.birth"))
-      .withColumn("__qa0", col("__nm.qa0"))
-      .drop("__nm")
-    lastNamePost(df1, colName, dataSource, cleanedName, qaName, emitBirth)
+    val parts = split(pyTitleUdf(c), ";", 5)
+    Families.normalize(input, Seq(lastNameFamily(
+      struct(parts.as("parts"), birthName.as("birth"), qa.as("qa0")), _("qa0"),
+      dataSource, outName, birthNameInput, alias, alternativeSpelling)))
   }
 
-  /** First-name post-split logic (F10 length-cap QA, F12 initial dot) —
-    * shared by the fused path and the column spec, like [[lastNamePost]].
+  /** The first-name family over a pinned kernel value holding `parts`
+    * (`qa0` reads its pre-split QA): F10 length-cap QA and F12 initial
+    * dot, shared by the fused path and the column spec like
+    * [[lastNameFamily]].
     */
-  private def firstNamePost(
-      df1: DataFrame, colName: String, dataSource: String,
-      cleanedName: Int => String, qaName: String): DataFrame = {
-    val k = maxParts(df1, col("__parts"))
+  private def firstNameFamily(
+      kernel: Column, qa0: Column => Column, dataSource: String, outName: String,
+      alias: Boolean, alternativeSpelling: Boolean): Family = {
+    val colName = if (alias) s"${outName}_alias" else outName
+    def cleanedName(i: Int): String =
+      if (alternativeSpelling) s"alternative_spellings_of_${colName}_cleaned_${i + 1}"
+      else s"${colName}_cleaned_$i"
+    val qaName =
+      if (alternativeSpelling) s"alternative_spellings_of_${colName}_qa" else s"${colName}_qa"
+    Family(kernel, kv => size(kv("parts")), { (kv, k) =>
+      (0 until k).map { i =>
+        val trimmed = pyStrip(get(kv("parts"), lit(i)))
+        // single-character first name gets a dot: "A" -> "A." (F12)
+        cleanedName(i) -> when(length(trimmed) === 1, concat(trimmed, lit("."))).otherwise(trimmed)
+      } ++ Seq(
+        qaName -> lenQa(kv("parts"), qa0(kv), k),
+        s"${colName}_data_source" -> lit(dataSource))
+    })
+  }
 
-    val splitCols = (0 until k).map(i => get(col("__parts"), lit(i)))
-    val lenQa = splitCols.dropRight(1)
-      .map(sc => coalesce(length(sc) > 49, lit(false)))
-      .foldLeft(col("__qa0"))(_ || _)
-
-    var out = df1
-    for (i <- 0 until k) {
-      val trimmed = pyStrip(get(col("__parts"), lit(i)))
-      // single-character first name gets a dot: "A" -> "A." (F12)
-      out = out.withColumn(cleanedName(i),
-        when(length(trimmed) === 1, concat(trimmed, lit("."))).otherwise(trimmed))
-    }
-    out
-      .withColumn(qaName, lenQa)
-      .withColumn(s"${colName}_data_source", lit(dataSource))
-      .drop("__parts", "__qa0")
+  /** The `normalize_first_name` family of `input` (see [[normalizeFirstName]]). */
+  private[normalize] def firstName(
+      input: Column,
+      dataSource: String = "crowd_sourcing",
+      outName: String = "first_name",
+      alias: Boolean = false,
+      alternativeSpelling: Boolean = false): Family = {
+    val kernel = udf((s: String) => NamesKernel.firstName(s))
+    firstNameFamily(kernel(input.cast("string")), kv => kv("qab") || kv("noble"),
+      dataSource, outName, alias, alternativeSpelling)
   }
 
   /** `normalize_first_name` (column_processing.py:232-342). Appends
@@ -259,24 +232,9 @@ object Names {
       dataSource: String = "crowd_sourcing",
       outName: String = "first_name",
       alias: Boolean = false,
-      alternativeSpelling: Boolean = false): DataFrame = {
-    val colName = if (alias) s"${outName}_alias" else outName
-    def cleanedName(i: Int): String =
-      if (alternativeSpelling) s"alternative_spellings_of_${colName}_cleaned_${i + 1}"
-      else s"${colName}_cleaned_$i"
-    val qaName =
-      if (alternativeSpelling) s"alternative_spellings_of_${colName}_qa" else s"${colName}_qa"
-    val kernel = org.apache.spark.sql.functions.udf {
-      (s: String) => NamesKernel.firstName(s)
-    }.asNondeterministic()
-    val df1 = input
-      .withColumn("__nm", kernel(col(firstName).cast("string")))
-      .trackedCheckpoint()
-      .withColumn("__parts", col("__nm")("parts"))
-      .withColumn("__qa0", col("__nm")("qab") || col("__nm")("noble"))
-      .drop("__nm")
-    firstNamePost(df1, colName, dataSource, cleanedName, qaName)
-  }
+      alternativeSpelling: Boolean = false): DataFrame =
+    Families.normalize(input, Seq(this.firstName(col(firstName), dataSource, outName,
+      alias, alternativeSpelling)))
 
   /** The original column-expression chain — the fused kernel's SPEC. */
   private[graft] def normalizeFirstNameExpr(
@@ -286,13 +244,6 @@ object Names {
       outName: String = "first_name",
       alias: Boolean = false,
       alternativeSpelling: Boolean = false): DataFrame = {
-    val colName = if (alias) s"${outName}_alias" else outName
-    def cleanedName(i: Int): String =
-      if (alternativeSpelling) s"alternative_spellings_of_${colName}_cleaned_${i + 1}"
-      else s"${colName}_cleaned_$i"
-    val qaName =
-      if (alternativeSpelling) s"alternative_spellings_of_${colName}_qa" else s"${colName}_qa"
-
     // single-branch-point dual chain, gated on the raw input
     // (see normalizeLastName for the why)
     val mayDiv = coalesce(col(firstName).rlike(Regexes.DivergenceCover), lit(false))
@@ -319,15 +270,10 @@ object Names {
 
     val qa = createQaCol(c, Regexes.Qa, Regexes.QaNoEntry) || hasNoble
 
+    // struct-packed for the same reason as normalizeLastNameExpr
     val parts = split(pyTitleUdf(c), ";", 5)
-    // same two-consumer materialization as the last-name family
-    // struct-packed for the same reason as normalizeLastName
-    val df1 = input
-      .withColumn("__nm", struct(parts.as("parts"), qa.as("qa0")))
-      .trackedCheckpoint()
-      .withColumn("__parts", col("__nm.parts"))
-      .withColumn("__qa0", col("__nm.qa0"))
-      .drop("__nm")
-    firstNamePost(df1, colName, dataSource, cleanedName, qaName)
+    Families.normalize(input, Seq(firstNameFamily(
+      struct(parts.as("parts"), qa.as("qa0")), _("qa0"),
+      dataSource, outName, alias, alternativeSpelling)))
   }
 }

@@ -2,7 +2,6 @@ package graft.normalize
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.core.SessionHygiene.TrackedCheckpoint
 
 /** Nationality standardization (SURVEY F21; reference
   * `column_processing.py:1217-1331`, helpers `aux_functions.py:525-604`).
@@ -133,22 +132,13 @@ object Nationality {
       val r = std(raw)
       (r.parts, r.standardized, r.qa)
     }
-    // same two-consumer materialization as the name chains: the arity
-    // aggregation and the output select otherwise both run the UDF pass
-    val with0 = df.withColumn("__nat", stdUdf(coalesce(col(natCol).cast("string"), lit(""))))
-      .trackedCheckpoint()
-    val kRow = with0.agg(max(size(col("__nat._1")))).head()
-    val k = if (kRow.isNullAt(0)) 1 else math.max(1, kRow.getInt(0))
-    var out = with0
-    for (i <- 0 until k) {
-      out = out
-        .withColumn(s"nationality_${i + 1}", get(col("__nat._1"), lit(i)))
-        .withColumn(s"nationality_${i + 1}_standardized", get(col("__nat._2"), lit(i)))
-    }
-    out
-      .withColumn("nationality_standardized_qa", col("__nat._3"))
-      .withColumn("nationality_quality_level",
-        when(col("__nat._3"), lit("Rohdaten")).otherwise(lit("technisch standardisiert")))
-      .drop("__nat")
+    Families.normalize(df, Seq(Family(
+      stdUdf(coalesce(col(natCol).cast("string"), lit(""))), kv => size(kv("_1")), (kv, k) =>
+        (0 until k).flatMap(i => Seq(
+          s"nationality_${i + 1}" -> get(kv("_1"), lit(i)),
+          s"nationality_${i + 1}_standardized" -> get(kv("_2"), lit(i)))) ++ Seq(
+          "nationality_standardized_qa" -> kv("_3"),
+          "nationality_quality_level" ->
+            when(kv("_3"), lit("Rohdaten")).otherwise(lit("technisch standardisiert"))))))
   }
 }

@@ -2,7 +2,6 @@ package graft.normalize
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.SessionHygiene.TrackedCheckpoint
 
 /** Prisoner-number normalization (SURVEY F16; reference
   * `src/aroa_etl/attribute_processing/column_processing.py:347-484`).
@@ -33,6 +32,22 @@ object PrisonerNumbers {
   private[graft] final case class PrisonerParts(
       trims: Seq[String], infos: Seq[String], qa: Boolean, n: Option[Int])
 
+  /** The F16 family of `input` (see [[normalise]]). */
+  private[normalize] def family(
+      input: Column,
+      dataSource: String = "crowd_sourcing",
+      outName: String = "prisoner_number"): Family = {
+    val kernel = udf((s: String) => PrisonerNumbersKernel.normalise(s))
+    Family(kernel(input.cast("string")), _("n"), (kv, k) =>
+      (0 until k).flatMap { i =>
+        val trimName = s"${outName}_trim_${i + 1}"
+        Seq(trimName -> kv("trims").getItem(i),
+          s"${trimName}_additional_information" -> kv("infos").getItem(i))
+      } ++ Seq(
+        s"${outName}_qa" -> kv("qa"),
+        s"${outName}_data_source" -> lit(dataSource)))
+  }
+
   /** r22: executes through the fused scalar kernel
     * ([[PrisonerNumbersKernel.normalise]]) — same design and
     * equivalence gates as [[Dates.normaliseDate]]; [[normaliseExpr]]
@@ -42,29 +57,8 @@ object PrisonerNumbers {
       input: DataFrame,
       prisonerNo: String,
       dataSource: String = "crowd_sourcing",
-      outName: String = "prisoner_number"): DataFrame = {
-    val kernel = org.apache.spark.sql.functions.udf {
-      (s: String) => PrisonerNumbersKernel.normalise(s)
-    }.asNondeterministic()
-    // same two-consumer materialization as the column spec: the arity
-    // aggregation (max part count) and the output select both read the
-    // kernel output — one evaluation, pinned
-    val df1 = input.withColumn("__pk", kernel(col(prisonerNo).cast("string")))
-      .trackedCheckpoint()
-    val row = df1.agg(max(col("__pk")("n"))).head()
-    val k = if (row.isNullAt(0)) 1 else math.max(row.getInt(0), 1)
-    var out = df1
-    for (i <- 0 until k) {
-      val trimName = s"${outName}_trim_${i + 1}"
-      out = out
-        .withColumn(trimName, col("__pk")("trims").getItem(i))
-        .withColumn(s"${trimName}_additional_information", col("__pk")("infos").getItem(i))
-    }
-    out
-      .withColumn(s"${outName}_qa", col("__pk")("qa"))
-      .withColumn(s"${outName}_data_source", lit(dataSource))
-      .drop("__pk")
-  }
+      outName: String = "prisoner_number"): DataFrame =
+    Families.normalize(input, Seq(family(col(prisonerNo), dataSource, outName)))
 
   /** The original column-expression F16 chain — the fused kernel's SPEC
     * (PrisonerNumbersFusedSpec diffs the two; see [[DatesKernel]]).
@@ -94,40 +88,31 @@ object PrisonerNumbers {
     c = sortListUdf(c)
 
     val parts = split(c, ";", 5)
-    // same two-consumer materialization as the name chains and the
-    // nationality standardizer: the arity aggregation and the output
-    // select would otherwise each evaluate the full clean/regex/
-    // sortListUdf chain once per row
-    val df1 = input.withColumn("__pparts", parts).withColumn("__pqa", qaBase)
-      .trackedCheckpoint()
-    val k = Names.maxParts(df1, col("__pparts"))
-
-    var out = df1
-    var qa: Column = col("__pqa")
-    for (i <- 0 until k) {
-      val trimName = s"${outName}_trim_${i + 1}"
-      // the gate column survives the checkpoint only via re-derivation:
-      // re-test the PART itself (cheap class scan, still one rlike)
-      val part = get(col("__pparts"), lit(i))
-      val partDiv = coalesce(part.rlike(Regexes.DivergenceCover), lit(false))
-      val deDotted = when(partDiv, regexp_replace(part, DeDot, ""))
-        .otherwise(regexp_replace(part, DeDotFast, ""))
-      // marker extraction: a single A/B/R/Z ahead of a non-letter
-      val charRaw = when(partDiv, regexp_extract(deDotted, CharRegex, 1))
-        .otherwise(regexp_extract(deDotted, CharRegexFast, 1))
-      val charCol = when(coalesce(length(charRaw), lit(0)) === 1, charRaw).otherwise(lit(""))
-      val cleaned = when(length(charCol) === 1,
-        when(partDiv, regexp_replace(deDotted, CharRegex, ""))
-          .otherwise(regexp_replace(deDotted, CharRegexFast, "")))
-        .otherwise(deDotted)
-      out = out
-        .withColumn(trimName, coalesce(cleaned, lit("")))
-        .withColumn(s"${trimName}_additional_information", charCol)
-      qa = qa || createQaCol(col(trimName), "[^0-9]", "^-$|nan|None")
-    }
-    out
-      .withColumn(s"${outName}_qa", qa)
-      .withColumn(s"${outName}_data_source", lit(dataSource))
-      .drop("__pparts", "__pqa")
+    Families.normalize(input, Seq(Family(
+      struct(parts.as("parts"), qaBase.as("qa")), kv => size(kv("parts")), { (kv, k) =>
+        val trims = (0 until k).map { i =>
+          // the gate column does not survive the pin: re-test the PART
+          // itself (cheap class scan, still one rlike)
+          val part = get(kv("parts"), lit(i))
+          val partDiv = coalesce(part.rlike(Regexes.DivergenceCover), lit(false))
+          val deDotted = when(partDiv, regexp_replace(part, DeDot, ""))
+            .otherwise(regexp_replace(part, DeDotFast, ""))
+          // marker extraction: a single A/B/R/Z ahead of a non-letter
+          val charRaw = when(partDiv, regexp_extract(deDotted, CharRegex, 1))
+            .otherwise(regexp_extract(deDotted, CharRegexFast, 1))
+          val charCol = when(coalesce(length(charRaw), lit(0)) === 1, charRaw).otherwise(lit(""))
+          val cleaned = when(length(charCol) === 1,
+            when(partDiv, regexp_replace(deDotted, CharRegex, ""))
+              .otherwise(regexp_replace(deDotted, CharRegexFast, "")))
+            .otherwise(deDotted)
+          (s"${outName}_trim_${i + 1}", coalesce(cleaned, lit("")), charCol)
+        }
+        trims.flatMap { case (n, trim, info) => Seq(n -> trim, s"${n}_additional_information" -> info) } ++
+          Seq(
+            s"${outName}_qa" -> trims.foldLeft(kv("qa")) { case (qa, (_, trim, _)) =>
+              qa || createQaCol(trim, "[^0-9]", "^-$|nan|None")
+            },
+            s"${outName}_data_source" -> lit(dataSource))
+      })))
   }
 }

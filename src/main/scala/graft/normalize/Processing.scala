@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions._
   * plain Scala over `df.columns`, no data pass), then each family's
   * processor appends its derived `_cleaned_i`/`_qa`/`_data_source`
   * columns. The reference's eight derived frames + index concat become
-  * one lazy plan of same-row column expressions.
+  * one lazy plan of same-row column expressions. Every name and
+  * prisoner-number family, whose widths depend on the data, goes through
+  * ONE [[Families.normalize]] call: one kernel projection, one pin, one
+  * arity aggregation and one select for all of them.
   */
 object Processing {
 
@@ -47,15 +50,11 @@ object Processing {
     cols.groupBy(base).toSeq.sortBy(_._1).map(_._2.sorted)
   }
 
-  /** `recombine_col_split` (`utils.py:98-105`): join a numbered family
-    * back into one space-joined column (named by the basename).
+  /** `recombine_col_split` (`utils.py:98-105`): a numbered family joined
+    * back into one space-joined value.
     */
-  def recombine(df: DataFrame, family: Seq[String]): (DataFrame, String) = {
-    val name = family.head.replaceAll("_\\d+$", "")
-    val joined = concat_ws(" ",
-      family.map(c => Clean.pyStrip(coalesce(col(c), lit("")))): _*)
-    (df.withColumn(s"__recombined_$name", joined), s"__recombined_$name")
-  }
+  def recombine(family: Seq[String]): Column =
+    concat_ws(" ", family.map(c => Clean.pyStrip(coalesce(col(c), lit("")))): _*)
 
   final case class ColumnRoles(
       lastName: Seq[String], firstName: Seq[String], prisonerNumber: Seq[String],
@@ -138,21 +137,13 @@ object Processing {
     val roles = detectColumnRoles(
       df.columns.filterNot(_ == "row_id").toSeq, skipColumns + "row_id")
 
-    for (family <- splitColsByBasename(roles.lastName)) {
-      val (d2, rc) = recombine(df, family)
-      df = Names.normalizeLastName(d2, rc, dataSource,
-        outName = family.head.replaceAll("_\\d+$", "")).drop(rc)
-    }
-    for (family <- splitColsByBasename(roles.firstName)) {
-      val (d2, rc) = recombine(df, family)
-      df = Names.normalizeFirstName(d2, rc, dataSource,
-        outName = family.head.replaceAll("_\\d+$", "")).drop(rc)
-    }
-    for (family <- splitColsByBasename(roles.prisonerNumber)) {
-      val (d2, rc) = recombine(df, family)
-      df = PrisonerNumbers.normalise(d2, rc, dataSource,
-        outName = family.head.replaceAll("_\\d+$", "")).drop(rc)
-    }
+    // every name and prisoner-number family in one pin and one arity job
+    def families(cols: Seq[String], family: (Column, String) => Family) =
+      splitColsByBasename(cols).map(f => family(recombine(f), f.head.replaceAll("_\\d+$", "")))
+    df = Families.normalize(df,
+      families(roles.lastName, Names.lastName(_, dataSource, _)) ++
+        families(roles.firstName, Names.firstName(_, dataSource, _)) ++
+        families(roles.prisonerNumber, PrisonerNumbers.family(_, dataSource, _)))
     for (triple <- splitDmyDateCols(roles.date)) {
       require(triple.size == 3, s"date family must be day/month/year: $triple")
       val day = triple.find(_.contains("_day")).get

@@ -446,8 +446,6 @@ object Pipeline {
         valueFor(pmod(doc, lit(4)), "v").as("field_a"),
         valueFor(pmod(doc + 1, lit(4)), "w").as("field_b"),
         lit("false").as("field_a_qa"), lit("false").as("field_b_qa"))
-      // single parquet split at bench SFs (see q52's note)
-      .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
     val spec = DedupSpec(idCol = "doc_id",
       otherStrictCols = Seq("field_a", "field_b"))
     val result = EncDeduplicater.run(input, spec)

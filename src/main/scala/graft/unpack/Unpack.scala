@@ -144,8 +144,11 @@ object Unpack {
     val keyOrder: Seq[String] = parsed
       .select(col("row_id"), posexplode(map_keys(col("__parsed"))).as(Seq("pos", "key")))
       .groupBy("key").agg(min(struct(col("row_id"), col("pos"))).as("first"))
-      .orderBy("first")
-      .collect().map(_.getString(0)).toSeq
+      // a handful of keys: sorted on the driver, no range-sampling jobs;
+      // exact, since one row's map holds one key per position
+      .collect()
+      .sortBy { r => val f = r.getStruct(1); (f.getLong(0), f.getInt(1)) }
+      .map(_.getString(0)).toSeq
     require(keyOrder.forall(_.endsWith("_repeat")),
       s"unpacking of non-'_repeat' groups is not implemented: ${keyOrder.filterNot(_.endsWith("_repeat"))}")
 

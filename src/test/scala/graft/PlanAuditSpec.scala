@@ -309,4 +309,51 @@ class PlanAuditSpec extends SparkSpec
         s"the bucket stage holds a regex or lambda: ${interpreted.map(_.simpleString(200))}")
     } finally spark.listenerManager.unregister(listener)
   }
+
+  test("the consensus vote reads one full-width exchange on the document id") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec,
+      MapGroupsExec, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.consensus.{DedupSpec, EncDeduplicater}
+    val s = spark
+    import s.implicits._
+    val rows = (0L until 90L).map(k => ((k / 3).toString, k, s"v${k % 2}", "false"))
+      .toDF("doc_id", "row_id", "field_a", "field_a_qa")
+    // the vote runs inside run's checkpoint job, so the audit reads
+    // every executed plan, not the final frame's
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      EncDeduplicater.run(rows, DedupSpec(idCol = "doc_id", otherStrictCols = Seq("field_a")))
+        .collect()
+      def votes = plans.toArray(Array.empty[SparkPlan]).toSeq
+        .flatMap(p => collect(p) { case m: MapGroupsExec => m })
+      val deadline = System.nanoTime() + 60L * 1000000000L // listener events arrive async
+      while (votes.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(votes.size === 1, s"one vote expected: $votes")
+      def onId(e: Expression) = e.references.exists(_.name == "doc_id")
+      val exchanges = collect(votes.head) { case e: ShuffleExchangeExec => e }
+      val onDoc = exchanges.filter(_.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.exists(onId)
+        case _ => false
+      })
+      assert(onDoc.size === 1, s"the vote must read exactly one exchange on the id: $exchanges")
+      assert(onDoc.head.shuffleOrigin === REPARTITION_BY_NUM)
+      assert(onDoc.head.numPartitions === graft.core.Parallelism.width(rows))
+      val appended = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(p => collect(p) {
+        case a: AppendColumnsExec => a
+        case a: AppendColumnsWithObjectExec => a
+      })
+      assert(appended.isEmpty, s"a groupByKey key column is still appended: $appended")
+    } finally spark.listenerManager.unregister(listener)
+  }
 }

@@ -52,6 +52,18 @@ class UnpackSpec extends SparkSpec {
     assert(r0.getAs[String]("imprisonment_camp") === "Unklar")
   }
 
+  test("repeat groups are ordered by first occurrence: row first, then position in the row") {
+    val s = spark
+    import s.implicits._
+    // z_repeat sits at position 0 of row 1, y_repeat at position 1 of
+    // row 0: row order decides, so y's columns come before z's
+    val raw = Seq(
+      (1L, """{"z_repeat": [{"c": "3"}]}"""),
+      (0L, """{"x_repeat": [{"a": "1"}], "y_repeat": [{"b": "2"}]}""")
+    ).toDF("row_id", "json_data")
+    assert(Unpack.unpack(raw, "json_data").columns.toSeq === Seq("row_id", "a", "b", "c"))
+  }
+
   test("X3 additional splits separate mis-joined values outside parentheses") {
     assert(Unpack.additionalSplits(Seq("Alice, Blice", "Clice"), "[\\|;,\\s]") ===
       Seq("Alice", "", "Blice", "Clice"))
